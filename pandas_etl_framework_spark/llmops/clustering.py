@@ -10,12 +10,9 @@ oracle is simply the iterations unrolled as CTEs (same pattern as
 graph.pagerank_quantized).
 
 Scale shape (the point of this implementation):
-- Assignment is ZERO-shuffle: the k centroids are collapsed into a single
-  broadcast row holding an array<struct<cid,c>>, and each vector computes
-  argmin_k dist(vq, c_k) entirely inside one projection via nested
-  higher-order lambdas (array_min over transform/zip_with/aggregate) —
-  no k× row blowup, no groupBy. At 100 TB this is a map stage fused into
-  the parquet scan.
+- Assignment is ZERO-shuffle: the k centroids ride an Arrow map closure
+  and each batch finds its nearest centroids with one exact float64 GEMM
+  (``_nearest``) — no k× row blowup, no groupBy.
 - The centroid update shuffles only (cid, dim) partial sums: k·64 groups
   with map-side combine, bytes independent of row count.
 - Overflow headroom: |x| ≤ 1 → q ≤ 2^20, diff² ≤ 2^42, ×64 dims ≤ 2^48;
@@ -28,7 +25,8 @@ Empty clusters drop out of the recompute identically in both engines
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 Q_SCALE = 1_000_000          # component quantization: round(x * 1e6)
@@ -49,8 +47,7 @@ def kmeans_quantized(
     ``vec_id`` < k (deterministic init)."""
     # Materialize the quantized vectors once: every Lloyd round scans `e`
     # for assignment AND for the centroid update, and without truncation
-    # the unrolled lineage re-reads the parquet + requantizes per round
-    # (the r01 plan audit measured Exchange x25 for 3 iterations).
+    # the unrolled lineage re-reads the parquet + requantizes per round.
     e = emb.select("vec_id", F.expr(_VQ_EXPR).alias("vq")).localCheckpoint(
         eager=True
     )
@@ -64,108 +61,25 @@ def kmeans_on_vq(
     relation — the entry point the IVF-PQ residual chains use, where the
     input is integer residuals rather than a fresh quantization of the
     parquet column. ``e`` should be checkpointed (or a cheap projection
-    of a checkpoint): each round scans it twice.
-
-    r16 shape (guide §2.3 "aggregate before you shuffle" / §4.2): each
-    round's centroid update used to posexplode the ASSIGNED relation —
-    an n_vectors x dim row shuffle per round, with the vq arrays also
-    riding the Arrow boundary back from the assignment pass. The Arrow
-    pass now scatter-adds the per-centroid component sums in numpy and
-    emits only k x dim partial rows PER BATCH (exact int64 — the same
-    addends in a different association), so the update shuffle is
-    batch-count-sized however large the corpus; the final assignment
-    pass returns (vec_id, cid) alone, dropping the vq payload from the
-    boundary. s and n reach the div(s, n) centroid rule as the identical
-    integers, so assignments and centroids are bit-identical."""
-    cent = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("vq").alias("c")
+    of a checkpoint): each round scans it twice. Returns
+    (assignments(vec_id, cid), centroids(cid, c)): ``kmeans_on_vq_grouped``
+    over a single group."""
+    assign, cent = kmeans_on_vq_grouped(
+        e.select("vec_id", F.lit(0).alias("grp"), "vq"), k, iterations
     )
-    assign = None
-    for it_round in range(iterations):
-        # k x dim integers — driver-sized by construction (same contract as
-        # the IVF/PQ codebooks). Shipping them inside an Arrow map closure
-        # lets assignment run as one BLAS GEMM per batch instead of a
-        # k*dim-term Catalyst lambda per vector. EXACT: |q_i| <= ~1e6, dim
-        # 64, so every squared distance term is an integer below 2^53 and
-        # float64 reproduces the JVM long arithmetic; ties break to the
-        # lowest cid both here (C sorted by cid, argmin returns the first
-        # minimum) and in the struct-min expression this replaces.
-        import numpy as np
+    return assign.drop("grp"), cent.drop("grp")
 
-        crows = sorted(cent.collect(), key=lambda r: r["cid"])
-        C = np.array([r["c"] for r in crows], dtype="int64").astype("float64")
-        cids = np.array([r["cid"] for r in crows], dtype="int64")
 
-        def partial_batches(it, C=C, cids=cids):
-            import numpy as np
-            import pandas as pd
-
-            cc = (C * C).sum(axis=1)
-            kk, dim = C.shape
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                Qi = np.stack(pdf["vq"].to_numpy())  # int64, exact
-                Q = Qi.astype("float64")
-                qq = (Q * Q).sum(axis=1)
-                d = qq[:, None] - 2.0 * (Q @ C.T) + cc[None, :]
-                idx = np.argmin(d, axis=1)
-                cnt = np.bincount(idx, minlength=kk)
-                S = np.zeros((kk, dim), dtype="int64")
-                np.add.at(S, idx, Qi)  # scatter-add: exact int64 sums
-                p = cnt > 0  # absent centroids emit nothing (as before)
-                npres = int(p.sum())
-                yield pd.DataFrame(
-                    {
-                        "cid": np.repeat(cids[p], dim),
-                        "pos": np.tile(
-                            np.arange(dim, dtype="int32"), npres
-                        ),
-                        "s": S[p].ravel(),
-                        "n": np.repeat(cnt[p].astype("int64"), dim),
-                    }
-                )
-
-        sums = (
-            e.mapInPandas(partial_batches, "cid long, pos int, s long, n long")
-            .groupBy("cid", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        )
-        cent = (
-            sums.select("cid", "pos", F.expr("div(s, n)").alias("cq"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cq"))),
-                    lambda st: st["cq"],
-                ).alias("c")
-            )
-            # k rows of k x dim ints: checkpointing is ~free and keeps the
-            # per-round plan constant instead of nesting all prior rounds
-            .localCheckpoint(eager=False)
-        )
-        if it_round == iterations - 1:
-
-            def assign_batches(it, C=C, cids=cids):
-                import numpy as np
-                import pandas as pd
-
-                cc = (C * C).sum(axis=1)
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    Q = np.stack(pdf["vq"].to_numpy()).astype("float64")
-                    qq = (Q * Q).sum(axis=1)
-                    d = qq[:, None] - 2.0 * (Q @ C.T) + cc[None, :]
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "cid": cids[np.argmin(d, axis=1)],
-                        }
-                    )
-
-            assign = e.mapInPandas(assign_batches, "vec_id long, cid long")
-    return assign.select("vec_id", "cid"), cent
+def _nearest(Q, C):
+    """Row index into ``C`` of each row's nearest centroid by squared L2,
+    computed as qq - 2·Q@Cᵀ + cc with one BLAS GEMM. EXACT on quantized
+    inputs: components are integers with |q| ≤ 2^21, so every product,
+    dot and distance term is an integer below 2^53 and float64 reproduces
+    the JVM long arithmetic. ``argmin`` returns the first minimum, so with
+    ``C`` sorted by id ties break to the lowest id."""
+    qq = (Q * Q).sum(axis=1)
+    cc = (C * C).sum(axis=1)
+    return np.argmin(qq[:, None] - 2.0 * (Q @ C.T) + cc[None, :], axis=1)
 
 
 def kmeans_on_vq_grouped(
@@ -176,53 +90,56 @@ def kmeans_on_vq_grouped(
     seeded per group by the rows with ``vec_id`` < k. Returns
     (assignments(vec_id, grp, cid), centroids(grp, cid, c)).
 
-    Bit-identical to running ``kmeans_on_vq`` once per group (same GEMM
-    arithmetic, same div(s, n) centroid update, same lowest-cid tie
-    break), but the m problems share every job: one collect of m*k
-    centroids per round instead of m, one Arrow pass over the tagged
-    union instead of m passes, one (grp, cid, pos) shuffle instead of m
-    — the IVF-PQ residual chains use this to train all PQ_M subspace
-    codebooks in a single pipeline (m sequential chains measured ~2
-    jobs each on the same data volume). Same r16 partial-sum update
-    shape as ``kmeans_on_vq``: the Arrow pass scatter-adds exact int64
-    per-(grp, cid) component sums and ships m*k*dim partial rows per
-    batch instead of posexploding n_vectors*dim rows through the
-    update shuffle; the final round's assignment pass returns
-    (vec_id, grp, cid) without the vq payload."""
-    import numpy as np
+    Each round collects the m*k centroids (driver-sized by construction),
+    ships them in an Arrow map closure, assigns every vector with
+    ``_nearest`` and scatter-adds exact int64 per-(grp, cid) component
+    sums, so only m*k*dim partial rows per batch reach the update
+    shuffle. The new centroid is div(s, n), truncating toward zero;
+    empty clusters drop out. Addition of integers is associative, so
+    results are bit-identical for any partitioning or batching. The
+    final round's assignment pass returns (vec_id, grp, cid) without
+    the vq payload.
 
+    Raises ``ValueError`` when ``k`` or ``iterations`` is below 1 or a
+    group has no seed row."""
+    if k < 1 or iterations < 1:
+        raise ValueError(
+            f"k and iterations must be >= 1, got k={k}, iterations={iterations}"
+        )
     # posexplode tags arrive as int; pin to long so the Arrow batch dtype
     # matches the declared mapInPandas output schema exactly
     e = e.select(
         "vec_id", F.col("grp").cast("long").alias("grp"), "vq"
     )
-    cent = e.filter(F.col("vec_id") < k).select(
-        "grp", F.col("vec_id").alias("cid"), F.col("vq").alias("c")
+    groups = Observation()
+    cent = (
+        e.observe(groups, F.collect_set("grp").alias("grps"))
+        .filter(F.col("vec_id") < k)
+        .select("grp", F.col("vec_id").alias("cid"), F.col("vq").alias("c"))
     )
-    assign = None
     for it_round in range(iterations):
-        crows = cent.collect()  # m*k rows of dim ints — driver-sized
         by_grp: dict[int, list] = {}
-        for r in crows:
+        for r in cent.collect():  # m*k rows of dim ints — driver-sized
             by_grp.setdefault(int(r["grp"]), []).append(r)
-        mats = {
-            g: (
-                np.array(
-                    [r["c"] for r in sorted(rows, key=lambda r: r["cid"])],
-                    dtype="int64",
-                ).astype("float64"),
-                np.array(
-                    sorted(int(r["cid"]) for r in rows), dtype="int64"
+        if it_round == 0:
+            unseeded = set(groups.get["grps"]) - set(by_grp)
+            if unseeded:
+                raise ValueError(
+                    f"groups {sorted(unseeded)} have no seed row (vec_id < {k})"
+                )
+        mats = {}
+        for g, rows in by_grp.items():
+            rows.sort(key=lambda r: r["cid"])
+            mats[g] = (
+                np.array([r["c"] for r in rows], dtype="int64").astype(
+                    "float64"
                 ),
+                np.array([r["cid"] for r in rows], dtype="int64"),
             )
-            for g, rows in by_grp.items()
-        }
 
         def partial_batches(it, mats=mats):
-            import numpy as np
             import pandas as pd
 
-            ccs = {g: (C * C).sum(axis=1) for g, (C, _) in mats.items()}
             for pdf in it:
                 if not len(pdf):
                     continue
@@ -235,15 +152,12 @@ def kmeans_on_vq_grouped(
                 for g in np.unique(grps):
                     C, cids = mats[int(g)]
                     sel = grps == g
-                    Q = Q_all[sel]
-                    qq = (Q * Q).sum(axis=1)
-                    d = qq[:, None] - 2.0 * (Q @ C.T) + ccs[int(g)][None, :]
-                    idx = np.argmin(d, axis=1)
+                    idx = _nearest(Q_all[sel], C)
                     kk = C.shape[0]
                     cnt = np.bincount(idx, minlength=kk)
                     S = np.zeros((kk, dim), dtype="int64")
                     np.add.at(S, idx, Qi_all[sel])  # exact int64 sums
-                    p = cnt > 0
+                    p = cnt > 0  # absent centroids emit nothing
                     npres = int(p.sum())
                     out["grp"].append(
                         np.full(npres * dim, int(g), dtype="int64")
@@ -272,44 +186,31 @@ def kmeans_on_vq_grouped(
                     lambda st: st["cq"],
                 ).alias("c")
             )
+            # m*k rows: checkpointing is ~free and keeps the per-round
+            # plan constant instead of nesting all prior rounds
             .localCheckpoint(eager=False)
         )
-        if it_round == iterations - 1:
 
-            def assign_batches(it, mats=mats):
-                import numpy as np
-                import pandas as pd
+    def assign_batches(it, mats=mats):
+        import pandas as pd
 
-                ccs = {g: (C * C).sum(axis=1) for g, (C, _) in mats.items()}
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    out_cid = np.empty(len(pdf), dtype="int64")
-                    grps = pdf["grp"].to_numpy()
-                    Q_all = np.stack(pdf["vq"].to_numpy()).astype("float64")
-                    for g in np.unique(grps):
-                        C, cids = mats[int(g)]
-                        sel = grps == g
-                        Q = Q_all[sel]
-                        qq = (Q * Q).sum(axis=1)
-                        d = (
-                            qq[:, None]
-                            - 2.0 * (Q @ C.T)
-                            + ccs[int(g)][None, :]
-                        )
-                        out_cid[sel] = cids[np.argmin(d, axis=1)]
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "grp": grps,
-                            "cid": out_cid,
-                        }
-                    )
-
-            assign = e.mapInPandas(
-                assign_batches, "vec_id long, grp long, cid long"
+        for pdf in it:
+            if not len(pdf):
+                continue
+            out_cid = np.empty(len(pdf), dtype="int64")
+            grps = pdf["grp"].to_numpy()
+            Q_all = np.stack(pdf["vq"].to_numpy()).astype("float64")
+            for g in np.unique(grps):
+                C, cids = mats[int(g)]
+                sel = grps == g
+                out_cid[sel] = cids[_nearest(Q_all[sel], C)]
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"].to_numpy(), "grp": grps, "cid": out_cid}
             )
-    return assign.select("vec_id", "grp", "cid"), cent
+
+    # the last round's assignment, against the centroids it updated from
+    assign = e.mapInPandas(assign_batches, "vec_id long, grp long, cid long")
+    return assign, cent
 
 
 def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,10 +822,8 @@ def ivfpq_train(e: DataFrame) -> tuple[dict[int, list[int]], list[dict[int, list
         # coarse k-means lineage
         .localCheckpoint(eager=True)
     )
-    # All PQ_M subspace codebooks train in ONE grouped Lloyd pipeline
-    # (bit-identical to m sequential kmeans_on_vq chains — see
-    # kmeans_on_vq_grouped): tag each residual slice with its subspace
-    # index and cluster per tag.
+    # All PQ_M subspace codebooks train in ONE grouped Lloyd pipeline: tag
+    # each residual slice with its subspace index and cluster per tag.
     sub_all = res.select(
         "vec_id",
         F.posexplode(
@@ -952,7 +851,7 @@ def ivfpq_encode(
     """Encode (vec_id, vq) rows against a FROZEN model: coarse cell =
     argmin squared-L2 to the final centroids, residual against that
     centroid, code_j = argmin to subspace codebook j. One zero-shuffle
-    Arrow pass (three GEMMs per batch, model shipped in the closure) —
+    Arrow pass (``_nearest`` GEMMs per batch, model shipped in the closure) —
     the 100-TB append path: new batches encode without touching training
     or existing codes, and ``build ≡ train + encode(any partition of the
     corpus)`` code-for-code because encoding is row-independent and
@@ -960,8 +859,6 @@ def ivfpq_encode(
     arithmetic: |component| ≤ 2^21 ⇒ every dot/distance term < 2^53).
 
     ``ivfpq_add_batch`` is this function — appending IS encoding."""
-    import numpy as np
-
     sub_d = _DIM // PQ_M
     cids = np.array(sorted(crows), dtype="int64")
     C = np.array([crows[int(c)] for c in cids], dtype="int64").astype("float64")
@@ -974,17 +871,13 @@ def ivfpq_encode(
     ]
 
     def enc(it, C=C, cids=cids, B=B, book_ids=book_ids):
-        import numpy as np
         import pandas as pd
 
-        cc = (C * C).sum(axis=1)
-        bb = [(Bj * Bj).sum(axis=1) for Bj in B]
         for pdf in it:
             if not len(pdf):
                 continue
             Q = np.stack(pdf["vq"].to_numpy()).astype("float64")
-            qq = (Q * Q).sum(axis=1)
-            idx = np.argmin(qq[:, None] - 2.0 * (Q @ C.T) + cc[None, :], axis=1)
+            idx = _nearest(Q, C)
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(),
                 "cid": cids[idx],
@@ -992,9 +885,7 @@ def ivfpq_encode(
             R = Q - C[idx]
             for j in range(PQ_M):
                 Rj = R[:, j * sub_d : (j + 1) * sub_d]
-                rr = (Rj * Rj).sum(axis=1)
-                dj = rr[:, None] - 2.0 * (Rj @ B[j].T) + bb[j][None, :]
-                out[f"code_{j}"] = book_ids[j][np.argmin(dj, axis=1)]
+                out[f"code_{j}"] = book_ids[j][_nearest(Rj, B[j])]
             yield pd.DataFrame(out)
 
     schema = "vec_id long, cid long, " + ", ".join(

@@ -219,27 +219,6 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_MINHASHES) -> DataFr
     )
 
 
-def minhash_signatures_wide(
-    sh: DataFrame, num_hashes: int = NUM_MINHASHES
-) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}): the whole signature in ONE aggregation.
-
-    Unlike the explode-by-seed form (minhash_signatures), the seed dimension
-    lives in columns, so the k per-shingle hashes are folded by map-side
-    partial aggregation — the shuffle carries one row per document, not
-    |shingles| × k rows. This is the form every scale path should use; the
-    long form exists for API parity and per-seed inspection.
-    """
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat_ws("|", F.lit(str(s)), F.col("shingle")))
-            ).alias(f"mh{s}")
-            for s in range(num_hashes)
-        ]
-    )
-
-
 _MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 
 # Fixed permutation constants (a*x + b) mod P, a < 2^30 so a*base < 2^62 —
@@ -278,8 +257,9 @@ def minhash_signatures_perm(
     min((a_s * h(x) + b_s) mod P) over ONE md5-derived base hash per
     shingle. Replaces the md5-per-seed family (k md5 calls per shingle)
     with 1 md5 + k multiply-add-mods — the arithmetic is codegen'd JVM-side
-    and portable, so the DuckDB oracle stays bit-identical. Same wide
-    map-side-combining aggregation shape as minhash_signatures_wide."""
+    and portable, so the DuckDB oracle stays bit-identical. The seed
+    dimension lives in columns, so the k minima fold by map-side partial
+    aggregation and the shuffle carries one row per document."""
     base = _shingle_base()
     return sh.groupBy("doc_id").agg(
         *[

@@ -1,83 +1,10 @@
-"""Round-16 optimization pins.
-
-kmeans partial-sum centroid update (clustering.py, guide §2.3/§4.2): the
-Lloyd rounds' centroid update now scatter-adds exact int64 per-centroid
-component sums inside the Arrow pass and folds per-batch partials with
-one small groupBy, instead of posexploding n_vectors x dim rows through
-the update shuffle. The fold is a re-association of the identical
-integer addends, so assignments AND centroids must be bit-identical to
-the direct per-member reduction — pinned here against a pure-Python
-integer Lloyd reference on a MULTI-PARTITION input (so several partial
-rows per (cid, pos) really are folded) with SIGNED components (the
-IVF-PQ residual path's shape, where the div(s, n) truncation direction
-matters).
-"""
+"""dedup_keeper_by_priority's min(struct(prio, id)) keeper pick."""
 
 from __future__ import annotations
 
 import pytest
 
-from pandas_etl_framework_spark.llmops import clustering
-
 pytestmark = pytest.mark.usefixtures("spark")
-
-
-def _div(s: int, n: int) -> int:
-    """Spark SQL div(): integral division truncating toward zero."""
-    q = abs(s) // n
-    return q if (s >= 0) == (n >= 0) else -q
-
-
-def _py_lloyd(vectors, k, iterations):
-    """Reference Lloyd chain: exact integer distances, ties -> lowest
-    cid, centroid update div(sum, count) truncating toward zero."""
-    cent = {vid: list(vectors[vid]) for vid in range(k)}
-
-    def assign(c):
-        out = {}
-        for vid, v in vectors.items():
-            best = None
-            for cid in sorted(c):
-                d = sum((a - b) * (a - b) for a, b in zip(v, c[cid]))
-                if best is None or d < best[0]:
-                    best = (d, cid)
-            out[vid] = best[1]
-        return out
-
-    for _ in range(iterations):
-        a = assign(cent)
-        cent = {
-            cid: [
-                _div(sum(col), len(members))
-                for col in zip(*(vectors[v] for v in members))
-            ]
-            for cid in set(a.values())
-            for members in [[v for v, c in a.items() if c == cid]]
-        }
-    return assign(cent), cent
-
-
-def test_kmeans_partial_sum_fold_matches_reference_signed_multibatch(spark):
-    # signed components (the residual-chain shape: negative sums make the
-    # div truncation direction observable) over enough rows and partitions
-    # that every (cid, pos) folds several per-batch partials
-    dim, k, iterations = 6, 3, 2
-    rows = []
-    for vid in range(60):
-        v = [((vid * 31 + j * 17) % 23) - 11 for j in range(dim)]
-        rows.append((vid, [int(x) for x in v]))
-    e = (
-        spark.createDataFrame(rows, "vec_id long, vq array<long>")
-        .repartition(7)
-        .localCheckpoint(eager=True)
-    )
-    assign, cent = clustering.kmeans_on_vq(e, k=k, iterations=iterations)
-    got_assign = {r["vec_id"]: r["cid"] for r in assign.collect()}
-    got_cent = {r["cid"]: list(r["c"]) for r in cent.collect()}
-
-    want_assign, want_cent = _py_lloyd(dict(rows), k, iterations)
-    assert got_cent == want_cent  # bit-identical centroids incl. signs
-    assert got_assign == want_assign
 
 
 def test_keeper_min_struct_matches_window_semantics(spark):
@@ -127,34 +54,3 @@ def test_keeper_min_struct_matches_window_semantics(spark):
     assert got[4] == (4, True)  # the NULL-prio doc is crowned (hazard path)
     assert got[2] == (2, True)  # tie on prio 3 -> lowest id
 
-
-def test_kmeans_grouped_partial_sum_matches_ungrouped(spark):
-    # the grouped trainer must stay bit-identical to per-group runs of
-    # the ungrouped one under the same partial-sum update
-    dim, k, iterations = 4, 2, 2
-    rows = []
-    for vid in range(40):
-        for g in (0, 1):
-            v = [((vid * 13 + g * 7 + j * 5) % 19) - 9 for j in range(dim)]
-            rows.append((vid, g, [int(x) for x in v]))
-    e = (
-        spark.createDataFrame(rows, "vec_id long, grp long, vq array<long>")
-        .repartition(5)
-        .localCheckpoint(eager=True)
-    )
-    assign_g, cent_g = clustering.kmeans_on_vq_grouped(
-        e, k=k, iterations=iterations
-    )
-    got_assign = {
-        (r["grp"], r["vec_id"]): r["cid"] for r in assign_g.collect()
-    }
-    got_cent = {(r["grp"], r["cid"]): list(r["c"]) for r in cent_g.collect()}
-    for g in (0, 1):
-        sub = e.filter(f"grp = {g}").select("vec_id", "vq").localCheckpoint(
-            eager=True
-        )
-        a, c = clustering.kmeans_on_vq(sub, k=k, iterations=iterations)
-        for r in a.collect():
-            assert got_assign[(g, r["vec_id"])] == r["cid"]
-        for r in c.collect():
-            assert got_cent[(g, r["cid"])] == list(r["c"])

@@ -12,7 +12,6 @@ import random
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from pandas_etl_framework_spark.llmops.multimodal import dhash_neardup_pairs
 from pandas_etl_framework_spark.scale import auto_join, auto_join_strategy
@@ -174,47 +173,3 @@ def test_auto_join_decision_and_value_identity(
     )
     assert canon(got) == canon(plain)
 
-
-# --------------------------------------------------------------------------
-# grouped Lloyd fusion: kmeans_on_vq_grouped must be BIT-identical to
-# running kmeans_on_vq once per group — same seeds (vec_id < k), same
-# integer-exact GEMM assignment, same div(s, n) centroid update, same
-# lowest-cid tie break. This is the regression guard for the IVF-PQ
-# build fusion (all PQ subspace codebooks in one tagged-union pipeline).
-# --------------------------------------------------------------------------
-@pytest.mark.parametrize("seed", [0, 1])
-def test_kmeans_grouped_matches_sequential(spark, seed):
-    from pandas_etl_framework_spark.llmops.clustering import (
-        kmeans_on_vq,
-        kmeans_on_vq_grouped,
-    )
-
-    rng = random.Random(seed)
-    n, d, m, k, iters = 40, 4, 3, 4, 2
-    # same vec_id set per group, different integer vectors — the real
-    # IVF-PQ shape (one subspace slice per group of the same vectors)
-    rows = [
-        (i, g, [rng.randrange(-8, 9) for _ in range(d)])
-        for i in range(n)
-        for g in range(m)
-    ]
-    e = spark.createDataFrame(rows, "vec_id long, grp long, vq array<long>")
-    e = e.localCheckpoint(eager=True)
-
-    ga, gc = kmeans_on_vq_grouped(e, k, iters)
-    got_assign = sorted(
-        (r["grp"], r["vec_id"], r["cid"]) for r in ga.collect()
-    )
-    got_cent = sorted(
-        (r["grp"], r["cid"], tuple(r["c"])) for r in gc.collect()
-    )
-
-    want_assign, want_cent = [], []
-    for g in range(m):
-        sub = e.filter(F.col("grp") == g).select("vec_id", "vq")
-        a, c = kmeans_on_vq(sub, k, iters)
-        want_assign += [(g, r["vec_id"], r["cid"]) for r in a.collect()]
-        want_cent += [(g, r["cid"], tuple(r["c"])) for r in c.collect()]
-
-    assert got_assign == sorted(want_assign)
-    assert got_cent == sorted(want_cent)
