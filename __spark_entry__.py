@@ -38,291 +38,17 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_cdc_historize_two_runs(spark, "/root/testdata/sf0.001")
 
 
-# Subset contract: the driver records correctness rows for the FIRST 50
-# queries() entries only, while the registry holds 227 (226 oracle-gated
-# + rows-only emb_pca_project, which stays OUT of the window permanently
-# per the r04 ruling — its gate is the numpy parity test in
-# tests/test_projection.py; io_read_current_hashes, text_domain_cap,
-# text_oov_rate, streaming_scd2_merge, dedup_minhash_recall,
-# rel_key_skew_profile, io_jdbc_roundtrip and emb_ivf_recall_at_k
-# joined in r06).
-# Cumulative after r05: 180 of the r05-era 203 ever driver-checked,
-# 180 ever-green.
-#
-# ROUND-6 ROTATION (VERDICT r05 item 1): slots 1-24 are every previously
-# dark query — the 23 enumerated in the r05 verdict (20 simple shapes /
-# pair-level siblings + the three r05 additions dedup_containment,
-# dedup_keeper_priority, events_mad_outliers) plus io_read_current_hashes
-# (S3's own oracle row per r05 item 8). All eight r06 registry additions
-# are IN this window, so a green window makes the registry 211/211
-# ever-checked — zero dark queries. (dedup_incremental and
-# streaming_enrich yield their re-check slots to io_jdbc_roundtrip and
-# emb_ivf_recall_at_k: both driver-green r05, untouched since.) The remaining slots re-check the code
-# this round touched (the graph fixpoints, triangle census and PPJoin
-# after the size-gated-broadcast change, the BPE trainer after the
-# oracle-dir pinning, connected-components consumers) and the r05
-# verdict's named riskiest shapes (streaming_sessionize,
-# streaming_interval_join, versioned_store_lifecycle).
-# ROUND-7 ROTATION (VERDICT r06 item 1): zero dark queries after r06, so
-# this window is re-verification debt + the six r07 additions. Slots:
-# (a) the 6 NEW r07 rows (standing rule: every new query windowed in its
-#     landing round);
-# (b) ALL 34 queries whose latest driver row is r02 — the oldest
-#     evidence on the books, predating five rounds of refactors;
-# (c) 10 r03-era rows, touched-code first: add_meta_columns gained the
-#     source_file param (cdc/scd2 consumers), _gate_dfreq's vocabulary
-#     bound changed (PPJoin/containment), clustering.py split
-#     kmeans_quantized/kmeans_on_vq (emb consumers), multimodal.py's
-#     Pillow adapter changed (decode_image), scale.py gained auto_join
-#     (salted-join sibling).
-# Remaining r03-era greens (cdc_inserts/updates/deletes_by_column/
-# deleted_by_full_load, schema_prepare, sketches, text_langid/quality/
-# contamination/tfidf, tpch r03 cohort, events r03 rows,
-# streaming_windowed_counts, sql_shared_delta/lateral, dedup_exact/
-# simhash/cross_source, emb_ann_lsh, multimodal_decode_video,
-# curation_pipeline, rel_filter_project, rel_window_lag) are the r08
-# rotation's backlog — staleness-order them next round.
-# ROUND-8 ROTATION (VERDICT r07 item 1): the 11 new r08 rows + every query
-# whose code changed this round + ALL 31 r03-era rows (the oldest evidence
-# on the books) + 1 touched-family r04 row. After a green window, no
-# registry query's latest driver row predates r04. Remaining r04-era rows
-# (cdc_simulate_runs, emb_pca/quantize/random_projection, events r04
-# cohort, io_csv/partitioned/store_reset, multimodal_metadata,
-# rel_array_agg/dq/higher_order/null_semantics/pivot_native/profile,
-# scd2_pit_join, sketch r04 cohort, text r04 cohort, tpch
-# q8/q11/q12/q15/q16/q19/q22, and streaming_cdc_historize + emb_pq_topk + multimodal_phash_dedup — evicted from
-# this window to fit the minhash-incremental family) are the r09 rotation's
-# backlog.
-# R09 BACKLOG CONSOLIDATED (late-r08 additions): the r04-era rows above,
-# PLUS the justified late-session evictions (each reason inline below):
-# emb_ivfpq_recall_at_k, dedup_minhash_pairs, dedup_containment,
-# emb_ivf_topk, multimodal_dhash_neardup, cdc_source_file_meta,
-# dedup_jaccard_prefix, emb_ivfpq_topk, cdc_inserts, cdc_updates,
-# dedup_exact, dedup_simhash, emb_ann_lsh, tpch_q1, text_langid,
-# sketch_hll_distinct, events_asof_join.
-# Staleness-order these in r09; the judge's r07 independent re-check
-# (the 10-query cohort) counts as fresh evidence for those named rows.
-# ROUND-10 ROTATION (VERDICT r09 item 1 — the standing rule, executed
-# this round after r09 stalled): window = (a) every row whose code or
-# oracle changed this round + the 2 new r10 rows, (b) the full 17-row
-# consolidated backlog above (which contains ALL 9 remaining r03-era
-# rows), (c) r04-era rows to fill 50 — prioritizing the 38 NOT named in
-# the r09 judge review's independent oracle re-check (the 9 re-checked
-# there — cdc_simulate_runs, emb_pq_topk, multimodal_phash_dedup,
-# rel_pivot_native, tpch_q8, tpch_q19, io_csv_roundtrip, scd2_pit_join,
-# rel_null_semantics — have fresher evidence than any driver row, so
-# they yield their slots), alphabetical within the tier. After a green
-# window, zero registry queries' latest driver row predates r04.
-# ROUND-11 ROTATION (VERDICT r10 item 1 — the standing rule): after the
-# green r10 window, staleness across all ten CORRECTNESS files is
-# r04:30 / r05:39 / r06:45 / r07:44 / r09:44 / r10:50, and ALL 30
-# r04-era rows carry fresh judge evidence (the r09 review's 9 + the r10
-# review's independent 21-row re-check), so the r05-era cohort heads
-# this window. Slots: (a) the 2 NEW r11 rows (landing-round rule);
-# (b) every row whose code or oracle changed this round — the BM25
-# family (totals amortization + exact overflow bound, a plan change),
-# the three streaming twins (batch_id-keyed idempotent foreachBatch
-# writes), and rel_auto_skew_join (explicit scale-independent
-# min_hot_rows in the oracle row); (c) ALL 39 rows whose latest driver
-# evidence is r05 — the oldest unrefreshed cohort; (d) 1 r06-era fill
-# (alphabetical). After a green window, zero registry queries' latest
-# driver evidence predates r06 except the judge-covered r04 cohort.
-# Late-r11 rebalance: the dhash hash-level-banding rewrite (the sf10
-# rehearsal's 17x super-linearity fix) changed dhash_neardup_pairs, so
-# multimodal_dhash_neardup + multimodal_dhash_neardup_capped window as
-# changed-code (bucket_report/phash consume untouched helpers). To fit:
-# the r06 fill (cdc_historize_two_runs) and ONE r05 row yield —
-# text_quality_sample, which was independently re-verified green at
-# sf0.01 this round (CORRECTNESS_LOCAL.md r11 section); it re-enters at
-# the r12 head. A second late row (text_tokens_unigram, the encoder
-# sibling) takes the slot of text_weighted_reservoir — also re-verified
-# green at sf0.01 this round, also r12-head.
-# ROUND-12 ROTATION (VERDICT r11 item 1 — the standing rule): after the
-# green r11 window, staleness across the eleven CORRECTNESS files is
-# r04:30 / r05:2 / r06:45 / r07:44 / r09:43 / r10:41 / r11:50. Slots:
-# (a) the 2 r05 rows that yielded their r11 slots to the late-landing
-# changed-code rows (text_quality_sample, text_weighted_reservoir —
-# both re-verified green locally in r11 AND individually by the r11
-# judge); (b) every row whose code or oracle changed this round — the
-# ADVICE r11 fixes (shared Java-\s word splitter in the unigram
-# trainer/encoder mirrors; pca_invariants input validation) and the
-# dedup_simhash_pairs distinct-signature collapse (in the r06 cohort
-# anyway) plus the PPJoin distinct-set collapse + prefix_cap rewrite
-# (dedup_jaccard_prefix, dedup_containment — the r11 item 4/5 ship);
-# (c) the r06-era cohort, alphabetical. 2+5+45 = 52 > 50, so TWO r06
-# rows yield to the changed-code rows (the standing rule ranks changed
-# code above staleness): cdc_historize_two_runs and scd2_merge — both
-# individually re-verified by the r11 judge on this tree AND covered by
-# the golden-scenario pytest suite, so they carry the freshest
-# independent evidence in the cohort; they head the r13 queue. After a
-# green window, zero registry rows' latest driver evidence predates
-# r06, and exactly those 2 rows remain at r06.
-# Mid-r12 addition: the round landed 12 NEW rows (text_wordpiece_train,
-# text_tokens_wordpiece — the WordPiece trainer/encoder completing the
-# tokenizer triad — text_kn_logprob, the interpolated Kneser-Ney
-# bigram-LM scorer, text_repetition, the Gopher Table-A1 repetition
-# family, sketch_hll_merge, the grouped HLL merge contract, and
-# graph_hyperball, the HLL-register neighborhood-function estimator,
-# graph_trustrank, the seed-teleport personalized PageRank, and
-# streaming_hll_registers, the HLL twin through the micro-batch
-# engine, streaming_interval_join_outer, the left-outer
-# stream-stream interval join with watermark-evicted NULL padding,
-# graph_harmonic, truncated harmonic centrality from the HyperBall
-# per-round ball estimates, and text_tokenizer_fertility, the
-# cross-tokenizer fertility/compression eval gating all three
-# train→encode chains in one row, and text_ccnet_buckets, CCNet's
-# head/middle/tail perplexity terciles over the KN LM), and the
-# landing-round rule gives new rows their round's slots. TWELVE r06
-# rows yield (ADVICE r12: all twelve named, so the arithmetic matches
-# the list edits): sql_shared_recursive,
-# streaming_scd2_merge and emb_ivf_recall_at_k (all three in the r11
-# judge's individually-re-checked list on this tree, the freshest
-# independent evidence remaining in the cohort) plus five rows whose
-# library paths are exactly an in-window sibling's: emb_kmeans_inertia
-# (emb_kmeans's kmeans_fit), emb_topk_batch (emb_topk's cosine
-# kernel), text_fingerprint (text_winnow_fingerprint's md5-prefix
-# fingerprint), dedup_minhash_bands (the banding relation
-# dedup_minhash_recall and dedup_clusters consume in-window), and
-# rel_window_first_last (rel_window_ntile's window path); plus FOUR
-# cohort-overflow yields displaced when the round's new-row set grew
-# mid-round from 8 to 12 — rel_case_when, emb_norms,
-# text_length_histogram, text_oov_rate — carrying no individual
-# rationale beyond the landing-round rule outranking staleness. All
-# twelve join the r13 head.
-# ROUND-13 ROTATION (VERDICT r12 item 1 — the standing rule, executed
-# as the r12 verdict recorded it): window = (a) the 1 NEW r13 row
-# (text_ccnet_cutoffs — the CCNet broadcast-cutoff scan assignment,
-# landing-round rule); (b) every row whose code or oracle changed this
-# round — the WordPiece champion fold hoist (ADVICE r12 item 1)
-# touches wordpiece_train, shared by text_wordpiece_train,
-# text_tokens_wordpiece AND text_tokenizer_fertility; the
-# interval-join oracle's NOT IN -> NOT EXISTS (ADVICE r12 item 3,
-# streaming_interval_join_outer); and graph_kcore + graph_khop, whose
-# edge-sized localCheckpoints moved to SERIALIZED MEMORY_AND_DISK
-# blocks (VERDICT r12 item 4, the pagerank Hazard-3 recipe); (c) the
-# 14 r06-era rows that yielded their r12 slots; (d) the r04-era
-# backlog in its recorded alphabetical order. 1+6+14+30 = 51 > 50, so
-# per the verdict's own spill rule ("44 slots cover 14+30 exactly if
-# the round adds <=6 new rows; spill the overflow to the r14 head
-# comment") ONE r04 row spills: tpch_q22, the alphabetical tail of the
-# recorded order, green in the judge's full r12 sweep and carrying
-# fresh r09/r10/r11 judge evidence — it heads the R14 queue.
-# Mid-r13 addition: a SECOND new row landed —
-# text_contamination_bloom, the Bloom-prefiltered contamination probe
-# (the 100-TB shape q_text_contamination's docstring promised; shipped
-# as an oracle row on the text_ccnet_cutoffs precedent, sharing the
-# exact row's oracle so the gate proves prefilter+confirm == exact).
-# Landing-round rule: it takes a slot, so tpch_q19 also spills to the
-# r14 head (same staleness class and evidence posture as tpch_q22).
-# Mid-r13 hazard fix: the first-decade rehearsal batch caught
-# dedup_clusters' candidate stage paying duplicate-multiplicity² (true
-# pair count grew 110x on 10x data; the row's own output is one keeper
-# per doc). q_dedup_clusters now feeds connected components the
-# bucket-STAR edge relation (minhash_band_star_edges — linear in band
-# rows, components provably equal the clique components, output and
-# oracle unchanged): sf10pb 109.2 -> 45.5 s, slope 10.3x -> 5.3x,
-# oracle re-verified at sf0.01 + sf0.001. Changed code takes a slot:
-# tpch_q16 spills to the r14 head with its two siblings.
-# 2 new + 7 changed + 14 r06 yields + 27 r04 rows = 50.
-# Mid-r13 note: the r13 streaming decade rehearsal exposed that all six
-# batch-parquet streaming rows read their source via
-# pathGlobFilter="events.parquet", which matches ZERO files when the
-# fixture stores events.parquet as a DIRECTORY (every Spark-written
-# fixture does) — a vacuous empty stream off the driver's single-file
-# testdata layout. Fixed by the shared layout-agnostic
-# events_stream_source (streaming/windows.py). All six rows re-verified
-# green at sf0.01 locally (CORRECTNESS_LOCAL.md r13); the window keeps
-# streaming_interval_join_outer (already in-window as changed code),
-# which exercises the shared helper for the other five — the
-# in-window-sibling precedent (r12) — because 5 more slots would evict
-# backlog rows the verdict ordered first; the five siblings stay in
-# their staleness cohorts.
-# ROUND-14 ROTATION (VERDICT r13 item 1 — the standing rule, executed
-# as the r13 verdict recorded it): window = (a) the 3 NEW r14 rows
-# (text_ccnet_sentinel — ccnet_buckets_full's zero-bigram sentinel
-# branch, oracle-gated on the pinned VALUES corpus per VERDICT r13
-# item 4; streaming_windowed_counts_file + streaming_dedup_counts_file
-# — the production-file-sink streaming twins that broke the r13
-# memory-sink decade ceiling, VERDICT r13 item 2); (b) rows whose code
-# changed this round — dedup_clusters (connected components get
-# max_iterations=20 with star edges, ADVICE r13 item 1) and
-# dedup_jaccard_prefix (jaccard_prefix_pairs now routes through the
-# shared jaccard_prefix_build, ADVICE r13 item 2), plus
-# streaming_windowed_counts as the in-window sibling for the shared
-# events_stream_source cache fix (ADVICE r13 item 3; the two NEW file
-# rows also exercise the helper, and the remaining four siblings stay
-# in their staleness cohorts — the r12/r13 precedent, because 4 more
-# slots would evict backlog rows the verdict ordered first); (c) the
-# three r04-era r13 spills, tpch_q16/q19/q22 — the registry's stalest
-# evidence; (d) the r07-era cohort in recorded alphabetical order.
-# 3 + 3 + 3 + 44 = 53 > 50, so per the standing spill rule the THREE
-# alphabetical-tail r07 rows — tpch_q4, tpch_q5, tpch_q6 — spill to
-# the R15 head (all three green in the judge's full r13 sweep).
-# Mid-r14 hazard fix: the decade-breadth rehearsal batch (first slopes
-# for the sketch/tpch/events/rel families) caught BOTH salting rows
-# dying at sf10full — SparkOutOfMemoryError building the shuffled-hash
-# relation: salted_join replicated the WHOLE small side x16 behind a
-# pinned shuffle_hash hint, and the x16 build side outgrew task memory
-# (UnsafeHashedRelation cannot spill). Fixed with the bounded hot-key
-# form: only the profiled hot keys' probe rows are salted against only
-# those keys' small rows (build side = hot keys x 16, broadcast-sized
-# at any corpus), the cold remainder joins plainly. auto_join wires its
-# own profile through; q_rel_salted_join now exercises the bounded form
-# on a genuinely hot fixture (oracle updated to the same remap).
-# Changed code + changed oracle take slots: rel_auto_skew_join joins
-# the (b) group (rel_salted_join already held a cohort slot), so ONE
-# more r07 row spills: tpch_q3, the new alphabetical tail. Decade
-# re-run: 2.7x / 3.9x, zero OOMs (SCALING.md r14).
-# R15 BACKLOG (executed below): tpch_q3, tpch_q4, tpch_q5, tpch_q6
-# first (the r14 spills, alphabetical), then the r09-era cohort, then
-# r10/r11, round-robin by staleness as usual. New r15 rows and
-# changed-code rows take their landing-round slots first, as always.
-# ROUND-15 ROTATION (VERDICT r14 items 1+2+3+6 — the standing rule):
-# window = (a) the 5 NEW r15 rows — rel_fuzzy_pairs_qgram +
-# rel_fuzzy_clusters (the Ed-Join/PassJoin q-gram prefix-filtered
-# fuzzy matcher that replaces rel_fuzzy_join's measured quadratic as
-# the scale path, VERDICT r14 item 1; brute-force DuckDB twins certify
-# losslessness at gate scale), emb_knn_per_label_lsh +
-# emb_knn_label_recall (the bounded per-label kNN — banded sign-LSH
-# within label — plus its recall row, VERDICT r14 item 3), and
-# streaming_sessionize_file (the applyInPandasWithState operator
-# through the production append-mode parquet sink, VERDICT r14
-# item 6); (b) rows whose query-path code changed this round:
-# text_gopher_rules (top-element mass rewritten as array_sort +
-# run-length fold, VERDICT r14 item 4 — a value-path rewrite, its
-# oracle unchanged). The ADVICE r14 guard fixes (salted_join how
-# validation, auto_join explicit-salted loud fallback, stream-probe
-# mtime keying, sink-root env) are value-neutral on every green row's
-# executed path and are pinned in tests/test_round15_properties.py;
-# their sibling rows (rel_salted_join, rel_auto_skew_join, the
-# streaming memory twins) stay in their staleness cohorts — the
-# r12/r13/r14 precedent, because more slots would evict backlog rows
-# the verdict ordered first (streaming_sessionize_file exercises the
-# shared probe + sink-root helpers in-window). (c) the r14 spills —
-# tpch_q3/q4/q5/q6, last driver-checked r07, the registry's stalest
-# evidence, named the rotation head by VERDICT r14 item 2; (d) the
-# r09-era cohort (41 rows), alphabetical. 5 + 1 + 4 + 41 = 51 > 50,
-# so per the standing spill rule the ONE alphabetical-tail r09 row —
-# tpch_q9 — spills to the R16 head (green in the judge's full r14
-# sweep on this tree).
+# Driver window: the driver checks only the FIRST 50 queries() entries
+# against their oracles. DRIVER_PRIORITY fills that window, in order; the
+# rest of the registry follows in registration order. Rows without an
+# oracle (rows-only checks such as emb_pca_project) stay out of the window:
+# _ordered_registry refuses them, as it refuses names not in the registry.
 DRIVER_PRIORITY = [
-    # -- (a) NEW this round: q-gram prefix-filtered fuzzy matching —
-    #    the scale path for the quadratic rel_fuzzy_join diagnostic ----
     "rel_fuzzy_pairs_qgram", "rel_fuzzy_clusters",
-    # -- (a) NEW this round: bounded per-label kNN (banded sign-LSH
-    #    within label) + its recall gate against the exact row ---------
     "emb_knn_per_label_lsh", "emb_knn_label_recall",
-    # -- (a) NEW this round: the custom stateful operator through the
-    #    production file sink (decade-measurable twin) ------------------
     "streaming_sessionize_file",
-    # -- (b) changed this round (VERDICT r14 item 4): top-element mass
-    #    via array_sort + run-length fold --------------------------------
     "text_gopher_rules",
-    # -- (c) the r14 spills — last driver-checked r07, the stalest
-    #    evidence in the registry (VERDICT r14 item 2's named head) -----
     "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-    # -- (d) the r09-era cohort, alphabetical; the tail tpch_q9 spills
-    #    to the r16 head -------------------------------------------------
     "cdc_deleted_by_full_load", "cdc_deletes_by_column",
     "curation_pipeline", "dedup_cross_source", "dedup_lines",
     "dedup_lines_incremental", "dedup_lines_report", "dedup_lines_store",
@@ -349,11 +75,8 @@ def _ordered_registry():
         # not an assert: under `python -O` an assert is stripped and a typo
         # here would silently reorder the driver window instead of failing
         raise ValueError(f"DRIVER_PRIORITY names not in REGISTRY: {missing}")
-    # window-slot hygiene (VERDICT r10 item 6): a no-oracle row in the
-    # driver window only proves rows>0 — it spends a slot owed to the
-    # oracle-gated backlog. Enforced in code, not by comment, so a future
-    # rotation can't repeat the r10 slip (emb_pca_project took a slot
-    # despite the standing r04 keep-out ruling).
+    # a no-oracle row in the driver window only proves rows>0 and spends
+    # a slot owed to an oracle-gated row
     no_oracle = [n for n in DRIVER_PRIORITY if REGISTRY[n][1] is None]
     if no_oracle:
         raise ValueError(

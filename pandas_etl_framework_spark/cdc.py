@@ -7,11 +7,12 @@ subqueries (SCDHelpers.py:154-156); Catalyst rewrites both to anti-joins,
 so we declare the anti-join outright.
 
 Scale posture: the delta join shuffles on KEY_HASH/RECORD_HASH (md5 hex —
-uniformly distributed, so no skew by construction). When the new batch is
-dim-sized relative to the store, pass ``broadcast_new=True`` to
-``get_delta``-family functions, or rely on AQE's runtime broadcast
-conversion. The current-store side should be read column-pruned
-(io.read_current_hashes) — the delta check only needs the two hash columns.
+uniformly distributed, so no skew by construction). The ``get_delta``
+family takes no broadcast hint: AQE converts a join to a broadcast at
+runtime when its build side is small, and an anti/semi join can only
+broadcast its right (current-store) side. The current-store side should
+be read column-pruned (io.read_current_hashes) — the delta check only
+needs the two hash columns.
 """
 
 from __future__ import annotations

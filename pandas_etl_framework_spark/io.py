@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
-from .constants import INSERT_RUN_ID, KEY_HASH, RECORD_HASH
+from .constants import INSERT_RUN_ID, KEY_HASH, RECORD_HASH, UPDATE_RUN_ID
 
 
 def read_csv(
@@ -61,14 +61,11 @@ def read_store(spark: SparkSession, path: str) -> DataFrame | None:
     what the digits happen to be), so the restore lives here instead of
     being patched at individual call sites (ADVICE r04).
     """
-    from .constants import INSERT_RUN_ID as _IRI
-    from .constants import UPDATE_RUN_ID as _URI
-
     df = read_parquet_df(spark, path)
     if df is None:
         return None
     dtypes = dict(df.dtypes)
-    for c in (_IRI, _URI):
+    for c in (INSERT_RUN_ID, UPDATE_RUN_ID):
         if c in dtypes and dtypes[c] != "string":
             df = df.withColumn(c, F.col(c).cast("string"))
     return df

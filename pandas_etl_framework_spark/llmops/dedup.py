@@ -5,11 +5,11 @@ Four families, each with a DuckDB oracle twin:
 - exact: group on md5(text) (direct extension of the record-hash machinery).
 - n-gram Jaccard: word-3-gram shingles, distinct-shingle self-join —
   exact pairwise similarity, the O(n²)-worst-case baseline.
-- MinHash + LSH: k=16 md5-based min-hashes over shingles, banded into 4
-  buckets, candidate pairs via bucket join — the scale path: O(n·k) work +
-  an equi-join on band keys instead of an all-pairs comparison. At 100 TB
-  the band join shuffles only (doc_id, band_key) pairs and AQE handles the
-  skew of hot buckets.
+- MinHash + LSH: k=16 permutation min-hashes over one md5 base hash per
+  shingle, banded into 4 buckets, candidate pairs via bucket join — the
+  scale path: O(n·k) work + an equi-join on band keys instead of an
+  all-pairs comparison. At 100 TB the band join shuffles only (doc_id,
+  band_key) pairs and AQE handles the skew of hot buckets.
 - SimHash: 32-bit signature from per-shingle md5 bits, near-dup = small
   Hamming distance; signature computation is one aggregation pass.
 
@@ -200,25 +200,6 @@ JOIN sizes sb ON sb.doc_id = doc_b
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_MINHASHES) -> DataFrame:
-    """(doc_id, seed, minhash): min over shingles of md5(seed || '|' || shingle).
-
-    One explode by ``num_hashes`` + a partial-aggregating groupBy — no
-    pairwise work. The md5-per-seed family is a portable stand-in for the
-    usual (a*x+b) mod p permutations; identical across engines.
-    """
-    seeds = F.array(*[F.lit(s) for s in range(num_hashes)])
-    return (
-        sh.select("doc_id", "shingle", F.explode(seeds).alias("seed"))
-        .groupBy("doc_id", "seed")
-        .agg(
-            F.min(
-                F.md5(F.concat_ws("|", F.col("seed").cast("string"), F.col("shingle")))
-            ).alias("minhash")
-        )
-    )
-
-
 _MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 
 # Fixed permutation constants (a*x + b) mod P, a < 2^30 so a*base < 2^62 —
@@ -269,31 +250,20 @@ def minhash_signatures_perm(
     )
 
 
-def minhash_signatures_fast(
-    sh: DataFrame, num_hashes: int = NUM_MINHASHES
-) -> DataFrame:
-    """Production MinHash: xxhash64(seed, shingle) instead of md5 — same
-    wide-aggregation shape, ~an order of magnitude less hash CPU (xxhash is
-    a 64-bit non-crypto hash evaluated natively in codegen; md5 allocates a
-    digest per call). Spark-only (no portable oracle — DuckDB's hash()
-    differs), so the oracle-paired queries keep the md5 family and this is
-    the variant to deploy at 100 TB."""
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"mh{s}")
-            for s in range(num_hashes)
-        ]
-    )
-
-
 def minhash_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) LSH banding relation for a documents
     DataFrame — the library entry the band queries and the capped pair
-    join share. band_key = '|'-joined minhashes of the band's 4
-    permutations, built on the permutation signature (ONE md5 per
-    shingle, one aggregation, one doc-sized shuffle); the band key is a
-    plain concat — hashing it again would only burn CPU."""
-    sig = minhash_signatures_perm(shingles_df(docs))
+    join share, built on the permutation signature (ONE md5 per shingle,
+    one aggregation, one doc-sized shuffle)."""
+    return _signature_bands(minhash_signatures_perm(shingles_df(docs)))
+
+
+def _signature_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) from a ``minhash_signatures_perm``
+    signature: band_key = '|'-joined minhashes of the band's
+    ROWS_PER_BAND permutations. All band keys come from one projection +
+    explode, so the signature is computed once; the key is a plain
+    concat — hashing it again would only burn CPU."""
     band_structs = [
         F.struct(
             F.lit(b).cast("long").alias("band"),
@@ -307,7 +277,6 @@ def minhash_bands(docs: DataFrame) -> DataFrame:
         )
         for b in range(LSH_BANDS)
     ]
-    # all 4 band keys in one projection + explode — sig is computed once
     return sig.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bk")
     ).select("doc_id", "bk.band", "bk.band_key")
@@ -365,36 +334,29 @@ def minhash_band_pairs(
     checkpoint truncates lineage so both sides are block reads.
 
     ``bucket_cap`` drops band buckets holding more than that many
-    documents BEFORE the self-join (VERDICT r07 item 2): one ultra-common
-    band key — boilerplate pages, an empty-text cluster — otherwise
-    produces a single quadratic bucket at corpus scale. The drop is never
-    silent: ``minhash_bucket_report`` over the same bands relation is the
+    documents BEFORE the self-join: one ultra-common band key —
+    boilerplate pages, an empty-text cluster — otherwise produces a
+    single quadratic bucket at corpus scale. The drop is never silent:
+    ``minhash_bucket_report`` over the same bands relation is the
     required accounting twin (dropped buckets ARE skipped candidate
-    clusters; publish them)."""
+    clusters; publish them), and the cap drops exactly the buckets that
+    report lists."""
     bands = bands.localCheckpoint(eager=True)
-    if bucket_cap is not None:
-        hot = (
-            bands.groupBy("band", "band_key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > bucket_cap)
-            .select("band", "band_key")
-        )
-        # few saturated buckets by construction (≤ corpus/cap); AQE
-        # broadcast-plans the aggregate-sized anti-join side at runtime
-        bands = bands.join(hot, ["band", "band_key"], "left_anti")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+    bands = _drop_saturated_buckets(bands, bucket_cap)
+    return _band_self_join(bands).distinct()
+
+
+def _band_self_join(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, once per (band, band_key) bucket
+    the two documents share — the one band self-join; callers dedupe."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
 
 
@@ -406,6 +368,20 @@ def minhash_bucket_report(bands: DataFrame, bucket_cap: int) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_docs"))
         .filter(F.col("n_docs") > bucket_cap)
     )
+
+
+def _drop_saturated_buckets(
+    bands: DataFrame, bucket_cap: int | None
+) -> DataFrame:
+    """``bands`` without the buckets ``minhash_bucket_report`` lists
+    (unchanged when ``bucket_cap`` is None) — the one cap rule of every
+    capped band join. Few saturated buckets by construction (≤
+    corpus/cap); AQE broadcast-plans the aggregate-sized anti-join side
+    at runtime."""
+    if bucket_cap is None:
+        return bands
+    hot = minhash_bucket_report(bands, bucket_cap).select("band", "band_key")
+    return bands.join(hot, ["band", "band_key"], "left_anti")
 
 
 def q_dedup_minhash_pairs(spark, sf_dir):
@@ -445,9 +421,9 @@ def _boilerplate_docs_and_cap(spark, sf_dir):
 
 
 def q_dedup_minhash_pairs_capped(spark, sf_dir):
-    """The banded pair join under a saturated bucket (VERDICT r07 item 2):
-    the boilerplate fixture's four ~25% buckets are dropped at
-    bucket_cap = n_docs // 10 and the join cost stays bounded; the oracle
+    """The banded pair join under a saturated bucket: the boilerplate
+    fixture's four ~25% buckets are dropped at bucket_cap = n_docs // 10
+    and the join cost stays bounded; the oracle
     recomputes the SAME capped semantics (buckets ≤ cap only), so both
     the cap decision and the surviving pair set are hash-pinned. The
     dropped buckets are published by dedup_minhash_bucket_report — the
@@ -1043,18 +1019,17 @@ def _gate_dfreq(
     the hint; None auto-decides against the session broadcast threshold
     using ``approx_count_distinct`` over the CHECKPOINTED token sets
     ``ts`` — i.e. an HLL estimate of the actual distinct-shingle
-    vocabulary (= the dfreq row count), padded 10% for sketch error.
-    One eager map-side-combined agg over checkpointed longs; unlike the
-    earlier sum(set_size) bound it does NOT overestimate on highly
-    duplicated corpora, where total token count exceeds the vocabulary
-    by orders of magnitude and would withhold a beneficial broadcast
-    (ADVICE r06)."""
+    vocabulary (= the dfreq row count), padded for sketch error.
+    One eager map-side-combined agg over checkpointed longs; unlike a
+    sum(set_size) bound it does NOT overestimate on highly duplicated
+    corpora, where total token count exceeds the vocabulary by orders of
+    magnitude and would withhold a beneficial broadcast."""
     if broadcast_dfreq is None and broadcast_threshold_bytes(
         ts.sparkSession
     ) > 0:
-        # explicit rsd + a 3-sigma pad: the default HLL rsd is 5%, so the
-        # old flat 10% pad could greenlight a broadcast on a ~2-sigma-tail
-        # underestimate (ADVICE r07)
+        # explicit rsd + a 3-sigma pad: the default HLL rsd is 5%, so a
+        # flat 10% pad could greenlight a broadcast on a ~2-sigma-tail
+        # underestimate
         rsd = 0.05
         vocab_est = (
             ts.select(F.explode("toks").alias("tok"))
@@ -1080,7 +1055,7 @@ def jaccard_prefix_pairs(
     literature) over DISTINCT token sets, instead of the all-sharing-pairs
     join over documents.
 
-    Distinct-set collapse (r12, VERDICT r11 item 5): the prefix join and
+    Distinct-set collapse: the prefix join and
     the verification run over one representative per DISTINCT token set;
     verified set pairs expand back to doc pairs through two set-keyed
     joins, and equal-set groups (Jaccard exactly 1) emit their pairs from
@@ -1116,7 +1091,9 @@ def jaccard_prefix_pairs(
     joins on rare tokens only.  Candidate pairs whose set sizes are
     incompatible with the threshold (J <= min/max) are dropped inside the
     join, then survivors are verified with an exact intersection count;
-    the filter ``t_den*i >= t_num*(|A|+|B|-i)`` is pure integers.
+    the filter ``t_den*i >= t_num*(|A|+|B|-i)`` is pure integers. The
+    threshold needs ``t_num >= 1`` and ``t_den >= 1``; anything else
+    raises ``ValueError`` before any job runs.
 
     Input: a (doc_id, toks, set_size) relation with ``toks`` the
     sorted-distinct 64-bit token-id array per document — from
@@ -1135,39 +1112,26 @@ def jaccard_prefix_pairs(
     set key is the same 64-bit id hashed over the whole array, with the
     same collision budget.
 
-    ``shared`` (ADVICE r13): an already-built ``(keyed, groups, prefix)``
-    triple from :func:`jaccard_prefix_build`, so a caller composing
-    several prefix-family stages (the cluster-routing recipe runs this
-    join AND the hot-family doc extraction) tokenizes and ranks the
-    corpus ONCE instead of once per stage. Must have been built with the
-    same ``t_num/t_den/broadcast_dfreq``; default None keeps the
-    single-call behavior byte-identical.
+    ``shared``: an already-built ``(keyed, groups, prefix)`` triple from
+    :func:`jaccard_prefix_build`, so a caller composing several
+    prefix-family stages (the cluster-routing recipe runs this join AND
+    the hot-family doc extraction) tokenizes and ranks the corpus ONCE
+    instead of once per stage. Must have been built with the same
+    ``t_num/t_den/broadcast_dfreq``; default None builds it here.
     """
     keyed, groups, prefix = shared or jaccard_prefix_build(
         token_sets, t_num, t_den, broadcast_dfreq
     )
-    spairs = _jaccard_set_pairs(
-        groups, t_num, t_den, broadcast_dfreq, prefix_cap, prefix=prefix
-    )
-    out_cols = ["intersection", "jaccard"]
+    spairs = _jaccard_set_pairs(groups, prefix, t_num, t_den, prefix_cap)
     cross = _expand_set_pairs(
-        spairs, keyed, "doc_a", "doc_b", out_cols, ordered=False
+        spairs, keyed, "doc_a", "doc_b", ["intersection", "jaccard"],
+        ordered=False,
     )
-    if t_num > t_den:  # J = 1.0 below threshold: no equal-set pairs
-        return cross
-    x = keyed.filter(F.col("set_size") > 0).alias("x")
-    y = keyed.filter(F.col("set_size") > 0).alias("y")
-    equal = (
-        x.join(y, "skey")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.set_size").cast("long").alias("intersection"),
-            F.lit(1.0).alias("jaccard"),
-        )
+    # an empty set has no Jaccard: equal empty sets are not pairs
+    return _with_equal_set_pairs(
+        cross, keyed.filter(F.col("set_size") > 0), t_num, t_den,
+        "doc_a", "doc_b", "jaccard", ordered=False,
     )
-    return cross.unionByName(equal)
 
 
 def jaccard_prefix_build(
@@ -1176,19 +1140,81 @@ def jaccard_prefix_build(
     t_den: int = JACCARD_T_DEN,
     broadcast_dfreq: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The shared tokenize/rank pipeline every prefix-family entry point
-    derives from: ``(keyed, groups, prefix)`` — the checkpointed
-    per-doc token sets, their distinct-set reduction, and the
-    rarest-first prefix slice. Build it ONCE and pass it as ``shared=``
-    to :func:`jaccard_prefix_pairs` / :func:`jaccard_hot_family_docs`
-    when composing stages (ADVICE r13: the routing recipe previously
-    ran this pipeline twice — two corpus materializations — for one
-    logical corpus scan). ``prefix`` is lazy: each consumer re-executes
-    it from the CHECKPOINTED ``groups``, so the duplicate cost is
-    window CPU, never a re-scan (see the checkpoint note inside
-    :func:`_jaccard_prefix_relation`)."""
+    """The shared tokenize/rank pipeline every Jaccard prefix-family
+    entry point derives from: ``(keyed, groups, prefix)`` — the
+    checkpointed per-doc token sets, their distinct-set reduction, and
+    the rarest-first prefix slice (see :func:`_prefix_build`). Build it
+    ONCE and pass it as ``shared=`` to :func:`jaccard_prefix_pairs` /
+    :func:`jaccard_hot_family_docs` when composing stages, so one
+    logical corpus scan costs one corpus materialization. ``prefix`` is
+    lazy: each consumer re-executes it from the CHECKPOINTED ``groups``,
+    so the duplicate cost is window CPU, never a re-scan."""
+    return _prefix_build(token_sets, t_num, t_den, broadcast_dfreq)
+
+
+def _prefix_build(
+    token_sets: DataFrame,
+    num: int,
+    den: int,
+    broadcast_dfreq: bool | None,
+    min_size: int | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(keyed, groups, prefix)`` for the threshold num/den — the one
+    prefix construction behind both PPJoin measures (Jaccard and
+    containment), their capped joins and their hot-token reports, so a
+    report and its join can never disagree.
+
+    ``prefix`` is the rarest-first slice (doc_id=skey, tok, set_size, rk,
+    mult) over DISTINCT token sets: a set of size n keeps its first
+    n − ceil(num·n/den) + 1 tokens in (dfreq, tok) order, dfreq counted
+    over distinct sets. A set meeting either threshold against another
+    shares a token with it inside that prefix (pigeonhole), under any
+    global total order. ``min_size`` (containment only) floors both
+    ``keyed`` and ``groups`` AFTER the checkpoint — checkpoint-then-filter
+    keeps the tokenize projection from being re-evaluated per row by a
+    pushed predicate (measured 7-10 s vs 0.6 s at sf0.1) — so near-empty
+    sets join neither side nor any equal-set group.
+
+    Raises ``ValueError`` unless num >= 1 and den >= 1, before any job
+    runs: a zero denominator divides by zero inside an executor, and a
+    non-positive numerator admits pairs that share no token, which no
+    token join can find."""
+    if num < 1 or den < 1:
+        raise ValueError(
+            f"threshold {num}/{den}: numerator and denominator must be >= 1"
+        )
     keyed, groups = _distinct_token_sets(token_sets)
-    prefix = _jaccard_prefix_relation(groups, t_num, t_den, broadcast_dfreq)
+    if min_size is not None:
+        keyed = keyed.filter(F.col("set_size") >= min_size)
+        groups = groups.filter(F.col("set_size") >= min_size)
+    ts = groups.select(F.col("skey").alias("doc_id"), "toks", "set_size", "mult")
+    sh = ts.select("doc_id", "set_size", "mult", F.explode("toks").alias("tok"))
+    dfreq = sh.groupBy("tok").agg(F.count("*").alias("dfreq"))
+    # prefix length: n - ceil(t*n) + 1, with ceil in exact integers
+    plen = F.col("set_size") - F.floor(
+        (num * F.col("set_size") + den - 1) / den
+    ).cast("long") + 1
+    w = Window.partitionBy("doc_id").orderBy("dfreq", "tok")
+    # dfreq is one row per distinct shingle — broadcast is right while the
+    # vocabulary fits an executor (shingled fixture text: 27k tokens at
+    # sf0.1), WRONG at corpus scale where distinct shingles ~ corpus size.
+    # ``broadcast_dfreq`` gates the hint; see _gate_dfreq. When withheld,
+    # the join and the doc_id window below run as two ordinary shuffles
+    # and nothing else changes.
+    # Both sides of the Jaccard candidate self-join consume `prefix`, so
+    # the dfreq join + ranking window run twice (plan shows Window×2) —
+    # but both start from the checkpointed token sets, so the duplicate
+    # is window CPU only, no re-scan. Measured at sf0.1, checkpointing
+    # `prefix` costs more (materialization write) than the duplicate
+    # window saves; on a cluster where the prefix slice is large relative
+    # to executor CPU, add .localCheckpoint(eager=False) here and
+    # re-measure.
+    prefix = (
+        sh.join(_gate_dfreq(ts, dfreq, broadcast_dfreq), "tok")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= plen)
+        .select("doc_id", "tok", "set_size", "rk", "mult")
+    )
     return keyed, groups, prefix
 
 
@@ -1251,6 +1277,42 @@ def _expand_set_pairs(
     return expanded.select(*pair, *carry)
 
 
+def _with_equal_set_pairs(
+    cross: DataFrame,
+    keyed: DataFrame,
+    num: int,
+    den: int,
+    col_a: str,
+    col_b: str,
+    measure: str,
+    ordered: bool,
+) -> DataFrame:
+    """``cross`` plus the doc pairs with EQUAL token sets (measure exactly
+    1, intersection = set size), which the distinct-set collapse never
+    verifies; nothing is added when num > den (1 is below the threshold).
+    ``ordered=False`` emits each unordered pair once (col_a < col_b);
+    ``ordered=True`` emits both directions, like :func:`_expand_set_pairs`."""
+    if num > den:
+        return cross
+    x, y = keyed.alias("x"), keyed.alias("y")
+    distinct_docs = (
+        F.col("x.doc_id") != F.col("y.doc_id")
+        if ordered
+        else F.col("x.doc_id") < F.col("y.doc_id")
+    )
+    equal = (
+        x.join(y, "skey")
+        .filter(distinct_docs)
+        .select(
+            F.col("x.doc_id").alias(col_a),
+            F.col("y.doc_id").alias(col_b),
+            F.col("x.set_size").cast("long").alias("intersection"),
+            F.lit(1.0).alias(measure),
+        )
+    )
+    return cross.unionByName(equal)
+
+
 def _hot_prefix_tokens(prefix: DataFrame, prefix_cap: int) -> DataFrame:
     """(tok, n_docs) for prefix tokens whose doc-weighted posting count
     exceeds the cap — ``mult`` rides on the set-level prefix relation, so
@@ -1263,71 +1325,31 @@ def _hot_prefix_tokens(prefix: DataFrame, prefix_cap: int) -> DataFrame:
     )
 
 
-def _jaccard_prefix_relation(
-    groups: DataFrame,
-    t_num: int,
-    t_den: int,
-    broadcast_dfreq: bool | None,
+def _drop_hot_prefix_tokens(
+    prefix: DataFrame, prefix_cap: int | None
 ) -> DataFrame:
-    """The rarest-first prefix slice (doc_id=skey, tok, set_size, rk,
-    mult) over DISTINCT token sets — shared by the candidate join and the
-    hot-token accounting twin so report and join can never disagree."""
-    ts = groups.select(F.col("skey").alias("doc_id"), "toks", "set_size", "mult")
-    sh = ts.select("doc_id", "set_size", "mult", F.explode("toks").alias("tok"))
-    dfreq = sh.groupBy("tok").agg(F.count("*").alias("dfreq"))
-    # prefix length: n - ceil(t*n) + 1, with ceil in exact integers
-    plen = F.col("set_size") - F.floor(
-        (t_num * F.col("set_size") + t_den - 1) / t_den
-    ).cast("long") + 1
-    w = Window.partitionBy("doc_id").orderBy("dfreq", "tok")
-    # dfreq is one row per distinct shingle — broadcast is right while the
-    # vocabulary fits an executor (shingled fixture text: 27k tokens at
-    # sf0.1), WRONG at corpus scale where distinct shingles ~ corpus size.
-    # ``broadcast_dfreq`` gates the hint (VERDICT r05 item 3); see
-    # _gate_dfreq. When withheld, the join and the doc_id window below run
-    # as two ordinary shuffles and nothing else changes.
-    # Both sides of the candidate self-join consume `prefix`, so the dfreq
-    # join + ranking window run twice (plan shows Window×2) — but both
-    # start from the checkpointed token sets, so the duplicate is window
-    # CPU only, no re-scan. Measured at sf0.1, checkpointing `prefix`
-    # costs more (materialization write) than the duplicate window saves;
-    # on a cluster where the prefix slice is large relative to executor
-    # CPU, add .localCheckpoint(eager=False) here and re-measure.
-    return (
-        sh.join(_gate_dfreq(ts, dfreq, broadcast_dfreq), "tok")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= plen)
-        .select("doc_id", "tok", "set_size", "rk", "mult")
-    )
+    """``prefix`` without the tokens ``_hot_prefix_tokens`` reports
+    (unchanged when ``prefix_cap`` is None): a pair survives the capped
+    join iff it shares a quiet prefix token. The anti-join's right side is
+    aggregate-sized; AQE broadcast-plans it at runtime."""
+    if prefix_cap is None:
+        return prefix
+    hot = _hot_prefix_tokens(prefix, prefix_cap).select("tok")
+    return prefix.join(hot, "tok", "left_anti")
 
 
 def _jaccard_set_pairs(
     groups: DataFrame,
+    prefix: DataFrame,
     t_num: int,
     t_den: int,
-    broadcast_dfreq: bool | None,
     prefix_cap: int | None,
-    prefix: DataFrame | None = None,
 ) -> DataFrame:
     """(skey_a, skey_b, intersection, jaccard) over DISTINCT non-equal
-    token sets — the PPJoin core, fed by ``_distinct_token_sets``.
-    ``prefix`` accepts a prebuilt prefix relation (from
-    :func:`jaccard_prefix_build`) so composed callers rank once."""
+    token sets — the PPJoin core over ``_prefix_build``'s groups and
+    prefix. A capped token generates no candidate on EITHER side."""
     ts = groups.select(F.col("skey").alias("doc_id"), "toks", "set_size")
-    if prefix is None:
-        prefix = _jaccard_prefix_relation(groups, t_num, t_den, broadcast_dfreq)
-    if prefix_cap is not None:
-        # hot-posting candidate cap: tokens whose doc-weighted prefix
-        # posting count exceeds the cap stop generating candidates on
-        # EITHER side (a pair survives iff it shares a quiet prefix
-        # token). The anti-join's right side is aggregate-sized; AQE
-        # broadcast-plans it at runtime. Accounting twin:
-        # jaccard_prefix_hot_tokens — never a silent drop.
-        prefix = prefix.join(
-            _hot_prefix_tokens(prefix, prefix_cap).select("tok"),
-            "tok",
-            "left_anti",
-        )
+    prefix = _drop_hot_prefix_tokens(prefix, prefix_cap)
     pa, pb = prefix.alias("pa"), prefix.alias("pb")
     # PPJoin's positional filter: Jaccard >= t needs overlap
     # o >= ceil(t/(1+t) * (|A|+|B|)); a match at ranks (rka, rkb) in the
@@ -1408,8 +1430,9 @@ def jaccard_prefix_hot_tokens(
     for every prefix token the capped join refuses to generate candidates
     from — exactly the drop a capped run makes, built from the same
     prefix construction so report and join can never disagree."""
-    _keyed, groups = _distinct_token_sets(token_sets)
-    prefix = _jaccard_prefix_relation(groups, t_num, t_den, broadcast_dfreq)
+    _keyed, _groups, prefix = _prefix_build(
+        token_sets, t_num, t_den, broadcast_dfreq
+    )
     return _hot_prefix_tokens(prefix, prefix_cap)
 
 
@@ -1423,7 +1446,7 @@ def jaccard_hot_family_docs(
 ) -> DataFrame:
     """(doc_id) for every document whose rarest-first prefix contains at
     least one hot token — the ROUTING SIGNAL a ``prefix_cap``-bounded run
-    publishes (VERDICT r12 item 6): these are exactly the members of the
+    publishes: these are exactly the members of the
     giant distinct-near-dup families the capped join refuses to
     enumerate, and the set the MinHash/clustering path should take over.
 
@@ -1462,7 +1485,7 @@ def minhash_band_star_edges(bands: DataFrame) -> DataFrame:
     the giant families ``jaccard_hot_family_docs`` routes here — their
     pair enumeration is the exact cost the routing exists to avoid.
 
-    Diameter note (ADVICE r13): replacing cliques with stars can up to
+    Diameter note: replacing cliques with stars can up to
     DOUBLE the min-label-propagation distance — two members of one
     bucket that were 1 hop apart under the clique are now 2 hops apart
     through the hub, so a chain of k overlapping buckets that converged
@@ -1511,11 +1534,9 @@ def jaccard_prefix_with_cluster_routing(
     SCALING.md "Routing the capped families to the clustering path".
     """
     ts = token_sets_df(docs)
-    # ADVICE r13: build the tokenize/rank pipeline ONCE and thread it
-    # into both arms — the capped join and the hot-family extraction
-    # previously each ran _distinct_token_sets (two eager corpus
-    # materializations) plus their own prefix ranking, doubling the
-    # corpus scan in the function documented as the 100-TB recipe.
+    # build the tokenize/rank pipeline ONCE and thread it into both arms
+    # (the capped join and the hot-family extraction): one eager corpus
+    # materialization and one prefix ranking, not two of each
     shared = jaccard_prefix_build(ts, t_num, t_den, broadcast_dfreq)
     pairs = jaccard_prefix_pairs(
         ts, t_num, t_den, broadcast_dfreq, prefix_cap, shared=shared
@@ -1639,16 +1660,7 @@ def incremental_minhash_candidates(
     production it is a persisted store scan, and at corpus scale an
     eager materialization would be the bug)."""
     batch_bands = batch_bands.localCheckpoint(eager=True)
-    if bucket_cap is not None:
-        hot = (
-            corpus_bands.groupBy("band", "band_key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > bucket_cap)
-            .select("band", "band_key")
-        )
-        corpus_bands = corpus_bands.join(
-            hot, ["band", "band_key"], "left_anti"
-        )
+    corpus_bands = _drop_saturated_buckets(corpus_bands, bucket_cap)
     n, o = batch_bands.alias("n"), corpus_bands.alias("o")
     corpus_leg = (
         n.join(
@@ -1662,21 +1674,12 @@ def incremental_minhash_candidates(
             F.lit("corpus").alias("leg"),
         )
     )
-    a, b = batch_bands.alias("a"), batch_bands.alias("b")
-    batch_leg = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            # the LATER document is the candidate duplicate; the earlier
-            # one is what it duplicates (keep-lowest-doc_id rule)
-            F.col("b.doc_id").alias("doc_new"),
-            F.col("a.doc_id").alias("doc_other"),
-            F.lit("batch").alias("leg"),
-        )
+    # the LATER document is the candidate duplicate; the earlier one is
+    # what it duplicates (keep-lowest-doc_id rule)
+    batch_leg = _band_self_join(batch_bands).select(
+        F.col("doc_b").alias("doc_new"),
+        F.col("doc_a").alias("doc_other"),
+        F.lit("batch").alias("leg"),
     )
     return corpus_leg.unionByName(batch_leg).distinct()
 
@@ -1841,15 +1844,10 @@ def q_dedup_incremental(spark, sf_dir):
     )
 
 
-def q_dedup_minhash_incremental(spark, sf_dir):
-    """Incremental near-dup candidates: bands are computed ONCE over the
-    union (batch = source 'src0', corpus = the rest — in production the
-    corpus bands come from a persisted store, not a recompute), then the
-    batch probes the corpus buckets and its own — the steady-state crawl
-    shape where per-snapshot cost is batch-sized, never corpus². The
-    oracle recomputes both legs from the same banding chain, so a pair
-    lost to the split (or a corpus-corpus pair leaking in) flips the row
-    red."""
+def _incremental_bands(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """(batch bands, corpus bands) for the incremental MinHash rows:
+    bands computed ONCE over the whole corpus and checkpointed, then split
+    on source (batch = INCR_BATCH_SOURCE, corpus = the rest)."""
     docs = _docs(spark, sf_dir)
     bands = (
         minhash_bands(docs)
@@ -1862,10 +1860,22 @@ def q_dedup_minhash_incremental(spark, sf_dir):
         )
         .localCheckpoint(eager=True)
     )
-    return incremental_minhash_candidates(
+    return (
         bands.filter(F.col("is_new")).drop("is_new"),
         bands.filter(~F.col("is_new")).drop("is_new"),
     )
+
+
+def q_dedup_minhash_incremental(spark, sf_dir):
+    """Incremental near-dup candidates: bands are computed ONCE over the
+    union (batch = source 'src0', corpus = the rest — in production the
+    corpus bands come from a persisted store, not a recompute), then the
+    batch probes the corpus buckets and its own — the steady-state crawl
+    shape where per-snapshot cost is batch-sized, never corpus². The
+    oracle recomputes both legs from the same banding chain, so a pair
+    lost to the split (or a corpus-corpus pair leaking in) flips the row
+    red."""
+    return incremental_minhash_candidates(*_incremental_bands(spark, sf_dir))
 
 
 SQL_DEDUP_MINHASH_INCREMENTAL = (
@@ -1903,28 +1913,15 @@ def q_dedup_minhash_band_store(spark, sf_dir):
     import shutil
     import tempfile
 
-    docs = _docs(spark, sf_dir)
-    bands = (
-        minhash_bands(docs)
-        .join(
-            docs.select(
-                "doc_id",
-                (F.col("source") == INCR_BATCH_SOURCE).alias("is_new"),
-            ),
-            "doc_id",
-        )
-        .localCheckpoint(eager=True)
-    )
+    batch_bands, corpus_bands = _incremental_bands(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="etl_band_store_")
     try:
-        bands.filter(~F.col("is_new")).drop("is_new").write.mode(
-            "overwrite"
-        ).partitionBy("band").parquet(tmp)
+        corpus_bands.write.mode("overwrite").partitionBy("band").parquet(tmp)
         stored = spark.read.parquet(tmp).select(
             "doc_id", F.col("band").cast("long").alias("band"), "band_key"
         )
         out = incremental_minhash_candidates(
-            bands.filter(F.col("is_new")).drop("is_new"), stored
+            batch_bands, stored
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2063,7 +2060,7 @@ def containment_pairs(
     standard asymmetric near-dup test for subset duplicates in web-corpus
     curation (alongside Jaccard; cf. Broder's containment coefficient).
 
-    Distinct-set collapse (r12, same redesign as ``jaccard_prefix_pairs``,
+    Distinct-set collapse (same redesign as ``jaccard_prefix_pairs``,
     measurements there): the one-sided prefix join and the verification
     run over one representative per DISTINCT token set; verified set
     pairs expand back to ORDERED doc pairs (every inner-copy × outer-copy
@@ -2082,46 +2079,24 @@ def containment_pairs(
     corpora with giant near-duplicate families of distinct sets.
     Verification is exact: array_intersect on the checkpointed sorted
     token-id arrays, integer threshold compare, no float in the filter.
+    The threshold needs ``c_num >= 1`` and ``c_den >= 1``; anything else
+    raises ``ValueError`` before any job runs.
 
     Shares ``token_sets_df``'s representation (and its within-doc 64-bit
-    hash-collision caveat) with ``jaccard_prefix_pairs``.
+    hash-collision caveat) and the prefix construction
+    (:func:`_prefix_build`) with ``jaccard_prefix_pairs``.
     """
-    keyed, groups = _containment_distinct_sets(token_sets, min_size)
-    spairs = _containment_set_pairs(
-        groups, c_num, c_den, broadcast_dfreq, prefix_cap
+    keyed, groups, prefix = _prefix_build(
+        token_sets, c_num, c_den, broadcast_dfreq, min_size
     )
+    spairs = _containment_set_pairs(groups, prefix, c_num, c_den, prefix_cap)
     cross = _expand_set_pairs(
         spairs, keyed, "doc_inner", "doc_outer",
         ["intersection", "containment"], ordered=True,
     )
-    if c_num > c_den:  # containment = 1.0 below threshold: no equal pairs
-        return cross
-    x, y = keyed.alias("x"), keyed.alias("y")
-    equal = (
-        x.join(y, "skey")
-        .filter(F.col("x.doc_id") != F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_inner"),
-            F.col("y.doc_id").alias("doc_outer"),
-            F.col("x.set_size").cast("long").alias("intersection"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return cross.unionByName(equal)
-
-
-def _containment_distinct_sets(
-    token_sets: DataFrame, min_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """``_distinct_token_sets`` with containment's min-size floor applied
-    AFTER the checkpoint (checkpoint-then-filter keeps the tokenize
-    projection from being re-evaluated per row by a pushed predicate —
-    measured 7-10 s vs 0.6 s at sf0.1) and BEFORE the collapse, so
-    near-empty sets join neither side nor any equal-set group."""
-    keyed, groups = _distinct_token_sets(token_sets)
-    return (
-        keyed.filter(F.col("set_size") >= min_size),
-        groups.filter(F.col("set_size") >= min_size),
+    return _with_equal_set_pairs(
+        cross, keyed, c_num, c_den, "doc_inner", "doc_outer", "containment",
+        ordered=True,
     )
 
 
@@ -2137,66 +2112,28 @@ def containment_hot_tokens(
     (tok, n_docs) for every INNER-prefix token the capped join refuses to
     generate candidates from (same construction as the join — see
     ``jaccard_prefix_hot_tokens``)."""
-    _keyed, groups = _containment_distinct_sets(token_sets, min_size)
-    prefix = _containment_prefix_relation(
-        groups, c_num, c_den, broadcast_dfreq
+    _keyed, _groups, prefix = _prefix_build(
+        token_sets, c_num, c_den, broadcast_dfreq, min_size
     )
     return _hot_prefix_tokens(prefix, prefix_cap)
 
 
-def _containment_prefix_relation(
-    groups: DataFrame,
-    c_num: int,
-    c_den: int,
-    broadcast_dfreq: bool | None,
-) -> DataFrame:
-    """The inner-side prefix slice over DISTINCT sets — shared by the
-    candidate join and the hot-token accounting twin."""
-    ts = groups.select(F.col("skey").alias("doc_id"), "toks", "set_size", "mult")
-    sh = ts.select("doc_id", "mult", F.explode("toks").alias("tok"))
-    dfreq = sh.groupBy("tok").agg(F.count("*").alias("dfreq"))
-    # k = ceil(c·n) in exact integers; prefix length = n − k + 1
-    k = F.floor((c_num * F.col("set_size") + c_den - 1) / c_den).cast("long")
-    plen = F.col("set_size") - k + 1
-    w = Window.partitionBy("doc_id").orderBy("dfreq", "tok")
-    # same vocab-sized-broadcast gate as jaccard_prefix_pairs (shared
-    # _gate_dfreq — VERDICT r05 item 3's hazard class, containment
-    # sibling): at corpus scale the hint is withheld and the join runs
-    # as an ordinary shuffle
-    return (
-        ts.select(
-            "doc_id", "set_size", "mult", F.explode("toks").alias("tok")
-        )
-        .join(_gate_dfreq(ts, dfreq, broadcast_dfreq), "tok")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= plen)
-        .select(F.col("doc_id").alias("skey_a"), "tok", "mult")
-    )
-
-
 def _containment_set_pairs(
     groups: DataFrame,
+    prefix: DataFrame,
     c_num: int,
     c_den: int,
-    broadcast_dfreq: bool | None,
     prefix_cap: int | None,
 ) -> DataFrame:
     """(skey_a=inner, skey_b=outer, intersection, containment) over
-    DISTINCT non-equal token sets — the one-sided-prefix core."""
+    DISTINCT non-equal token sets — the one-sided-prefix core. The cap
+    applies to the inner side only: candidates come from inner prefixes."""
     ts = groups.select(F.col("skey").alias("doc_id"), "toks", "set_size")
     sh = ts.select("doc_id", F.explode("toks").alias("tok"))
-    prefix = _containment_prefix_relation(
-        groups, c_num, c_den, broadcast_dfreq
+    prefix = _drop_hot_prefix_tokens(
+        prefix.select(F.col("doc_id").alias("skey_a"), "tok", "mult"),
+        prefix_cap,
     )
-    if prefix_cap is not None:
-        # hot-posting candidate cap (inner side only — candidates are
-        # generated from inner prefixes); accounting twin:
-        # containment_hot_tokens. Same contract as jaccard's.
-        prefix = prefix.join(
-            _hot_prefix_tokens(prefix, prefix_cap).select("tok"),
-            "tok",
-            "left_anti",
-        )
     cand = (
         prefix.join(sh.select(F.col("doc_id").alias("skey_b"), "tok"), "tok")
         .filter(F.col("skey_a") != F.col("skey_b"))
@@ -2329,37 +2266,8 @@ def minhash_recall_report(
     # candidates from the SAME (possibly sampled) docs so recall is
     # measured like-for-like; `sh` is the checkpointed shingle relation
     # above, so the signature pass re-reads blocks, not the corpus
-    sig = minhash_signatures_perm(sh)
-    band_structs = [
-        F.struct(
-            F.lit(b).cast("long").alias("band"),
-            F.concat_ws(
-                "|",
-                *[
-                    F.col(f"mh{b * ROWS_PER_BAND + i}").cast("string")
-                    for i in range(ROWS_PER_BAND)
-                ],
-            ).alias("band_key"),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_key").localCheckpoint(eager=True)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    bands = _signature_bands(minhash_signatures_perm(sh))
+    cand = minhash_band_pairs(bands).localCheckpoint(eager=True)
     hits = truth.join(cand, ["doc_a", "doc_b"]).agg(
         F.count("*").alias("n_hits")
     )

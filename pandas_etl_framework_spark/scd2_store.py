@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .constants import KEY_HASH, SCD2_UPPER_BOUND, VALID_TO
+from .io import read_parquet_df
 from .meta_columns import create_currents
 from .scd2 import get_valid_from_date, historize_dataset, merge_scd2_open
 
@@ -39,12 +40,7 @@ class Scd2Store:
     # -- reads -------------------------------------------------------------
 
     def _read_partition(self, state: str) -> DataFrame | None:
-        from pyspark.sql.utils import AnalysisException
-
-        try:
-            return self.spark.read.parquet(f"{self.path}/{STATE_COL}={state}")
-        except AnalysisException:
-            return None
+        return read_parquet_df(self.spark, f"{self.path}/{STATE_COL}={state}")
 
     def read(self) -> DataFrame | None:
         """Full store (open ∪ closed), without the physical state column."""

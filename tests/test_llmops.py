@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from pandas_etl_framework_spark.llmops import multimodal
 from pandas_etl_framework_spark.llmops.dedup import (
-    minhash_signatures,
+    minhash_signatures_perm,
     shingles_df,
 )
 from pandas_etl_framework_spark.llmops.similarity import (
@@ -103,10 +103,9 @@ def test_minhash_identical_docs_identical_signatures(spark):
          (3, "entirely different words appear in this one here")],
         "doc_id long, text string",
     )
-    sig = minhash_signatures(shingles_df(docs)).collect()
-    by_doc = {}
-    for r in sig:
-        by_doc.setdefault(r["doc_id"], {})[r["seed"]] = r["minhash"]
+    sig = minhash_signatures_perm(shingles_df(docs)).collect()
+    by_doc = {r["doc_id"]: tuple(r)[1:] for r in sig}
+    assert len(by_doc) == 3
     assert by_doc[1] == by_doc[2]
     assert by_doc[1] != by_doc[3]
 
@@ -268,27 +267,6 @@ def test_ivf_search_scans_fraction(spark, embeddings):
     assert total == embeddings.count()
     # no empty-cluster collapse with deterministic init on this data
     assert len(probe_counts) >= 4
-
-
-def test_minhash_fast_variant_properties(spark):
-    """xxhash64 MinHash: identical docs get identical signatures, distinct
-    docs differ, and timing-relevant shape (one row per doc) holds."""
-    from pandas_etl_framework_spark.llmops.dedup import (
-        minhash_signatures_fast,
-        shingles_df,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog"),
-         (3, "entirely different words appear in this one here")],
-        "doc_id long, text string",
-    )
-    sig = minhash_signatures_fast(shingles_df(docs))
-    rows = {r["doc_id"]: tuple(r)[1:] for r in sig.collect()}
-    assert len(rows) == 3
-    assert rows[1] == rows[2]
-    assert rows[1] != rows[3]
 
 
 def test_connected_components_and_dedup_clusters(spark):

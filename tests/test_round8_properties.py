@@ -95,49 +95,6 @@ def test_dhash_capped_pairs_equal_uncapped_on_pigeonhole_safe_fixture(spark):
     assert next(r["n_ids"] for r in report if r["band"] == 0) == n
 
 
-def test_minhash_cap_drops_boilerplate_bucket_pairs_only(spark):
-    """The capped band join must drop exactly the pairs whose ONLY shared
-    buckets are saturated (the boilerplate cluster) and keep every other
-    candidate pair."""
-    from pandas_etl_framework_spark.llmops.dedup import (
-        _BOILERPLATE_TEXT,
-        MINHASH_CAP_DENOM,
-        minhash_band_pairs,
-        minhash_bands,
-        minhash_bucket_report,
-    )
-
-    docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select(
-            "doc_id",
-            F.when(F.col("doc_id") % 4 == 0, F.lit(_BOILERPLATE_TEXT))
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cap = docs.count() // MINHASH_CAP_DENOM
-    bands = minhash_bands(docs).localCheckpoint(eager=True)
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_band_pairs(bands, bucket_cap=cap).collect()
-    }
-    uncapped = {
-        (r["doc_a"], r["doc_b"]) for r in minhash_band_pairs(bands).collect()
-    }
-    boiler = {
-        r["doc_id"] for r in docs.filter(F.col("doc_id") % 4 == 0).collect()
-    }
-    # dropped pairs are exactly the boilerplate-boilerplate candidates
-    dropped = uncapped - capped
-    assert dropped and all(a in boiler and b in boiler for a, b in dropped)
-    assert capped <= uncapped
-    # and the report names the saturated buckets (one per band, all ~25%)
-    rep = minhash_bucket_report(bands, bucket_cap=cap).collect()
-    assert len(rep) == 4 and all(r["n_docs"] == len(boiler) for r in rep)
-
-
 def test_auto_join_aqe_skew_middle_regime(spark):
     """Moderate skew (share in [0.05, 0.2)) must take the 'aqe_skew'
     branch: strategy decision, sort-merge plan shape (the join AQE's
@@ -208,53 +165,6 @@ def test_ivfpq_persisted_codes_probe_filter_prunes_partitions(spark, tmp_path):
         int(r["cid"]) for r in filtered.select("cid").distinct().collect()
     }
     assert cells <= set(int(p) for p in probed) and cells
-
-
-def test_incremental_minhash_candidates_match_full_join_restriction(spark):
-    """batch-vs-corpus + batch-vs-batch candidates must be EXACTLY the
-    full self-join's pairs that touch the batch — nothing lost by the
-    split, no corpus-corpus pair leaking in."""
-    from pandas_etl_framework_spark.llmops.dedup import (
-        INCR_BATCH_SOURCE,
-        incremental_minhash_candidates,
-        minhash_band_pairs,
-        minhash_bands,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    bands = (
-        minhash_bands(docs)
-        .join(
-            docs.select(
-                "doc_id",
-                (F.col("source") == INCR_BATCH_SOURCE).alias("is_new"),
-            ),
-            "doc_id",
-        )
-        .localCheckpoint(eager=True)
-    )
-    new_ids = {
-        r["doc_id"] for r in bands.filter("is_new").select("doc_id").distinct().collect()
-    }
-    inc = incremental_minhash_candidates(
-        bands.filter("is_new").drop("is_new"),
-        bands.filter(~F.col("is_new")).drop("is_new"),
-    ).collect()
-    got = {(r["doc_new"], r["doc_other"], r["leg"]) for r in inc}
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_band_pairs(bands.drop("is_new")).collect()
-    }
-    want = set()
-    for a, b in full:  # a < b by minhash_band_pairs' convention
-        if a in new_ids and b in new_ids:
-            # doc_new = the LATER doc, doc_other = the earlier it duplicates
-            want.add((b, a, "batch"))
-        elif a in new_ids:
-            want.add((a, b, "corpus"))
-        elif b in new_ids:
-            want.add((b, a, "corpus"))
-    assert got == want and got
 
 
 # --------------------------------------------------------------------------
