@@ -40,18 +40,16 @@ PR_SCALE = 1_000_000_000_000  # 10^12
 _NODE_ROW_BYTES = 32
 
 
-def _node_hinter(spark, broadcast: bool | None, count_nodes):
+def _node_hinter(spark, count_nodes):
     """Per-loop broadcast decision for node-sized relations (ranks,
-    frontier/visited, labels/winner): honor an explicit ``broadcast``
-    override; in auto mode count the nodes ONCE (the relation is already
-    checkpointed, so the count is a cheap job) and hint only when
-    ``n_nodes * _NODE_ROW_BYTES`` fits under the session's
-    autoBroadcastJoinThreshold. Returns a df->df hinter applied at every
+    frontier/visited, labels/winner): count the nodes ONCE (the relation
+    is already checkpointed, so the count is a cheap job) and hint only
+    when ``n_nodes * _NODE_ROW_BYTES`` fits under the session's
+    autoBroadcastJoinThreshold; with broadcasting disabled (threshold
+    <= 0) the count is skipped. Returns a df->df hinter applied at every
     loop join — the fallback is a plain key-partitioned join, so the
-    fixpoints no longer force node-sized broadcasts at any scale
+    fixpoints never force node-sized broadcasts at any scale
     (VERDICT r05 item 2)."""
-    if broadcast is not None:
-        return lambda df: maybe_broadcast(df, force=broadcast)
     if broadcast_threshold_bytes(spark) <= 0:
         return lambda df: df
     n_nodes = count_nodes()
@@ -60,16 +58,11 @@ def _node_hinter(spark, broadcast: bool | None, count_nodes):
     )
 
 
-def pagerank_quantized(
-    edges: DataFrame, iterations: int = 3, broadcast: bool | None = None
-) -> DataFrame:
-    """(node, rank_q) after ``iterations`` damped rounds over ``edges``
-    (src, dst, w). All arithmetic integer; deterministic by construction.
-
-    ``broadcast``: None (default) auto-gates the per-iteration broadcast
-    of the node-sized rank/sum relations on the session broadcast
-    threshold vs the counted node set; True/False force the hint on/off
-    (False = pre-partitioned shuffle joins, the beyond-10^8-nodes plan)."""
+def _weighted_edges(edges: DataFrame):
+    """``(e, nodes, bc)`` for a damped walk over ``edges`` (src, dst, w):
+    the edges joined with their source's out-weight (src, dst, w, out_w),
+    the node set, and the node-sized broadcast hinter. Shared by
+    :func:`pagerank_quantized` and :func:`trustrank_quantized`."""
     # Materialize the loop invariants once. The edge relation is often
     # itself a join/aggregate pipeline (purchase_edges is orders x lineitem),
     # and it feeds the node set, the out-weight join, and the weighted-edge
@@ -113,24 +106,41 @@ def pagerank_quantized(
     e = edges.join(out_w, "src").persist(StorageLevel.MEMORY_AND_DISK)
     e.count()  # materialize while the build-scratch blocks still exist
     edges.unpersist()
-    n_df = nodes.agg(F.count("*").alias("n"))
     # ranks/sums are one row per node — orders of magnitude smaller than
     # the edge relation. Broadcasting keeps `e` in place all rounds (no
     # per-iteration shuffle of the big side); the hinter broadcasts only
     # while the counted node set fits the session threshold, else every
     # loop join runs as a plain shuffle join on the node key (the
-    # beyond-10^8-nodes plan, now an executable path). The 1-row n_df
-    # stays unconditionally broadcast.
-    bc = _node_hinter(edges.sparkSession, broadcast, nodes.count)
+    # beyond-10^8-nodes plan, an executable path).
+    return e, nodes, _node_hinter(e.sparkSession, nodes.count)
+
+
+def _walk_sums(e: DataFrame, ranks: DataFrame, bc) -> DataFrame:
+    """(node, s): one round's integer contribution sums — each source's
+    rank split over its out-edges by weight, summed per destination."""
+    contrib = e.join(bc(ranks), e.src == ranks.node).select(
+        F.col("dst").alias("node"),
+        F.expr("div(rank_q * w, out_w)").alias("c"),
+    )
+    return contrib.groupBy("node").agg(F.sum("c").alias("s"))
+
+
+def pagerank_quantized(edges: DataFrame, iterations: int = 3) -> DataFrame:
+    """(node, rank_q) after ``iterations`` damped rounds over ``edges``
+    (src, dst, w). All arithmetic integer; deterministic by construction.
+
+    The per-iteration broadcast of the node-sized rank/sum relations is
+    gated on the session broadcast threshold vs the counted node set;
+    threshold -1 gives the pre-partitioned shuffle-join plan (the
+    beyond-10^8-nodes plan)."""
+    e, nodes, bc = _weighted_edges(edges)
+    # the 1-row n_df stays unconditionally broadcast
+    n_df = nodes.agg(F.count("*").alias("n"))
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", F.expr(f"div({PR_SCALE}, n)").alias("rank_q")
     )
     for _ in range(iterations):
-        contrib = e.join(bc(ranks), e.src == ranks.node).select(
-            F.col("dst").alias("node"),
-            F.expr("div(rank_q * w, out_w)").alias("c"),
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+        sums = _walk_sums(e, ranks, bc)
         ranks = (
             nodes.join(bc(sums), "node", "left")
             .crossJoin(F.broadcast(n_df))
@@ -304,9 +314,62 @@ def cosupply_backbone(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame, broadcast: bool | None = None
-) -> DataFrame:
+# cosupply_backbone in SQL, ending in the canonical (u < v) backbone edges
+# ``eb`` — the shared head of every backbone oracle. Every multiply-
+# referenced CTE is MATERIALIZED (ps twice by pairs' self-join, pairs by
+# stats + eb, eb by each oracle's own edge CTEs), so DuckDB's default
+# inlining never runs the quadratic ps self-join twice per oracle
+# evaluation (ADVICE r08).
+_SQL_BACKBONE = """
+WITH ps AS MATERIALIZED (
+    SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
+),
+pairs AS MATERIALIZED (
+    SELECT a.s AS u, b.s AS v, CAST(COUNT(*) AS BIGINT) AS shared
+    FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
+    GROUP BY a.s, b.s
+),
+stats AS (
+    SELECT CAST(SUM(shared) AS BIGINT) AS s_sum,
+           CAST(COUNT(*) AS BIGINT) AS p_cnt
+    FROM pairs
+),
+eb AS MATERIALIZED (
+    SELECT u, v FROM pairs, stats
+    WHERE shared * p_cnt > s_sum
+      AND 4 * (shared * p_cnt - s_sum) * (shared * p_cnt - s_sum)
+            > 9 * s_sum * p_cnt
+)"""
+
+
+def _symmetric_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) in both directions for undirected (u, v) edges."""
+    return edges.selectExpr("u AS src", "v AS dst").unionByName(
+        edges.selectExpr("v AS src", "u AS dst")
+    )
+
+
+def _exact_ball2(sym: DataFrame) -> DataFrame:
+    """(node, ball2): the EXACT radius-2 ball size over symmetric edges
+    (self + neighbors + neighbors-of-neighbors) — a Σdeg² wedge
+    expansion, feasible only at gate scale (see q_graph_hyperball)."""
+    a, b = sym.alias("a"), sym.alias("b")
+    return (
+        sym.select(F.col("src").alias("node"), F.col("src").alias("x"))
+        .unionByName(sym.select(F.col("src").alias("node"),
+                                F.col("dst").alias("x")))
+        .unionByName(
+            a.join(b, F.col("a.dst") == F.col("b.src")).select(
+                F.col("a.src").alias("node"), F.col("b.dst").alias("x")
+            )
+        )
+        .distinct()
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("ball2"))
+    )
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle census of an undirected simple graph given as
     canonical (u < v) edges: one row (n_edges, n_triangles, n_wedges,
     clustering_coeff).
@@ -337,11 +400,10 @@ def triangle_count(
         "n", (F.col("d") * F.lit(1 << 32) + F.col("n")).alias("k")
     )
     # keyed is one row per node — same size-gated hint as the fixpoint
-    # loops (auto: broadcast only while the counted node set fits the
-    # session threshold; the fallback re-keys via two shuffle joins)
+    # loops (broadcast only while the counted node set fits the session
+    # threshold; the fallback re-keys via two shuffle joins)
     bc = _node_hinter(
         edges.sparkSession,
-        broadcast,
         lambda: edges.select(F.col("u").alias("n")).unionByName(
             edges.select(F.col("v").alias("n"))
         ).distinct().count(),
@@ -403,38 +465,19 @@ def q_graph_triangles(spark, sf_dir):
 # Oracle: same backbone (identical integer surprise test), triangles via
 # the raw-id orientation — the census is orientation-invariant, so the
 # degree-ordered Spark plan and the id-ordered SQL must agree exactly.
-SQL_GRAPH_TRIANGLES = """
-WITH ps AS MATERIALIZED (
-    SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-),
-pairs AS MATERIALIZED (
-    SELECT a.s AS u, b.s AS v, CAST(COUNT(*) AS BIGINT) AS shared
-    FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
-    GROUP BY a.s, b.s
-),
-stats AS (
-    SELECT CAST(SUM(shared) AS BIGINT) AS s_sum,
-           CAST(COUNT(*) AS BIGINT) AS p_cnt
-    FROM pairs
-),
-e AS MATERIALIZED (
-    SELECT u, v FROM pairs, stats
-    WHERE shared * p_cnt > s_sum
-      AND 4 * (shared * p_cnt - s_sum) * (shared * p_cnt - s_sum)
-            > 9 * s_sum * p_cnt
-),
+SQL_GRAPH_TRIANGLES = _SQL_BACKBONE + """,
 deg AS (
     SELECT n, CAST(COUNT(*) AS BIGINT) AS d
-    FROM (SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
+    FROM (SELECT u AS n FROM eb UNION ALL SELECT v AS n FROM eb)
     GROUP BY n
 ),
 tri AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-    FROM e e1
-    JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-    JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
+    FROM eb e1
+    JOIN eb e2 ON e1.u = e2.u AND e1.v < e2.v
+    JOIN eb e3 ON e3.u = e1.v AND e3.v = e2.v
 )
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_edges,
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM eb) AS n_edges,
        (SELECT n_triangles FROM tri) AS n_triangles,
        COALESCE((SELECT CAST(SUM(d * (d - 1) // 2) AS BIGINT) FROM deg), 0)
            AS n_wedges,
@@ -453,7 +496,6 @@ def khop_distances(
     edges: DataFrame,
     seeds: DataFrame,
     hops: int = 3,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """(node, dist) for every node within ``hops`` of ``seeds`` (column
     ``node``) over ``edges`` (src, dst) — breadth-first frontier
@@ -465,11 +507,10 @@ def khop_distances(
     not the visited set; an anti-join against the visited set keeps the
     frontier minimal. Edges are localCheckpointed once; visited/frontier
     are lazily checkpointed per round so lineage stays flat. Frontier and
-    visited relations are broadcast (node-id rows); beyond ~10^8 visited
-    nodes, swap to edges pre-partitioned on src with the visited set
-    shuffle-joined — that swap is now the auto/off path of the
-    ``broadcast`` gate (None = auto on node count vs session threshold,
-    False = always shuffle joins).
+    visited relations (node-id rows) are broadcast while the counted node
+    set fits the session broadcast threshold; beyond it (or at threshold
+    -1) the frontier and visited joins run as shuffle joins on the node
+    key.
     """
     # the one corpus-sized relation: serialized blocks (the pagerank
     # recipe, SCALING.md Hazard 3) so the 32-way unroll can't OOM; the
@@ -483,11 +524,10 @@ def khop_distances(
     # counting sources alone would undercount arbitrarily on a directed
     # sink-heavy graph, e.g. a star with one source and 10^9 sinks, and
     # then force-broadcast a huge visited relation); one cheap job over
-    # the checkpointed edges, skipped when `broadcast` is forced or the
-    # threshold disables broadcasting.
+    # the checkpointed edges, skipped when the threshold disables
+    # broadcasting.
     bc = _node_hinter(
         edges.sparkSession,
-        broadcast,
         lambda: edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
@@ -583,9 +623,7 @@ FROM d3
 # Label propagation (community detection)
 # --------------------------------------------------------------------------
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 2, broadcast: bool | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label propagation over undirected ``edges`` (u, v):
     every node starts as its own label; each round, a node adopts the most
     frequent label among its neighbors, ties broken by SMALLEST label —
@@ -605,19 +643,17 @@ def label_propagation(
     out of every round, and partial map-side aggregation applies where a
     window could not. The label relation (one row per node) is broadcast
     into the edge join exactly like PageRank's rank relation — gated the
-    same way (``broadcast=None`` auto-hints on node count vs session
-    threshold, False forces the pre-partitioned shuffle-join plan beyond
-    ~10^8 nodes). Labels are lazily checkpointed per round so lineage
-    and plan size stay flat in the round count.
+    same way, on node count vs the session broadcast threshold (threshold
+    -1 gives the shuffle-join plan beyond ~10^8 nodes). Labels are lazily
+    checkpointed per round so lineage and plan size stay flat in the
+    round count.
     """
-    sym = edges.selectExpr("u AS src", "v AS dst").unionByName(
-        edges.selectExpr("v AS src", "u AS dst")
-    ).localCheckpoint(eager=True)
+    sym = _symmetric_edges(edges).localCheckpoint(eager=True)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     # nodes feeds the initial labels AND the gate count; checkpoint so the
-    # auto gate's count() doesn't re-run the distinct
+    # gate's count() doesn't re-run the distinct
     nodes = nodes.localCheckpoint(eager=True)
-    bc = _node_hinter(edges.sparkSession, broadcast, nodes.count)
+    bc = _node_hinter(edges.sparkSession, nodes.count)
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(rounds):
         freq = (
@@ -651,28 +687,9 @@ def q_graph_label_propagation(spark, sf_dir):
 
 
 def _sql_lpa(rounds: int = 2) -> str:
-    # same backbone CTE as graph_triangles, then the rounds unrolled;
-    # RANK/ROW_NUMBER with (c DESC, label) picks the min-label mode
-    head = """
-WITH ps AS MATERIALIZED (
-    SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-),
-pairs AS MATERIALIZED (
-    SELECT a.s AS u, b.s AS v, CAST(COUNT(*) AS BIGINT) AS shared
-    FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
-    GROUP BY a.s, b.s
-),
-stats AS (
-    SELECT CAST(SUM(shared) AS BIGINT) AS s_sum,
-           CAST(COUNT(*) AS BIGINT) AS p_cnt
-    FROM pairs
-),
-eb AS MATERIALIZED (
-    SELECT u, v FROM pairs, stats
-    WHERE shared * p_cnt > s_sum
-      AND 4 * (shared * p_cnt - s_sum) * (shared * p_cnt - s_sum)
-            > 9 * s_sum * p_cnt
-),
+    # the backbone head, then the rounds unrolled; ROW_NUMBER with
+    # (c DESC, label) picks the min-label mode
+    head = _SQL_BACKBONE + """,
 e AS MATERIALIZED (
     SELECT u AS src, v AS dst FROM eb
     UNION ALL
@@ -748,10 +765,8 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS):
     # copy (6.1x); this removes the remaining unroll hazard for free.
     from pyspark import StorageLevel
 
-    sym = (
-        edges.selectExpr("u AS src", "v AS dst")
-        .unionByName(edges.selectExpr("v AS src", "u AS dst"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    sym = _symmetric_edges(edges).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
     alive = sym
     for _ in range(rounds):
@@ -781,34 +796,11 @@ def q_graph_kcore(spark, sf_dir):
 
 
 def _sql_kcore(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
-    # same backbone + symmetric-edge head as the LPA oracle; EVERY
-    # multiply-referenced stage MATERIALIZED — each e{i} is referenced
-    # three times in stage i+1 and DuckDB's default inlining would
-    # re-evaluate the chain exponentially; the head CTEs are
-    # multiply-referenced too (ps twice by pairs' self-join, pairs by
-    # stats + eb, eb twice by e0's symmetric union), so without the
-    # keyword the quadratic ps self-join could run twice per oracle
-    # evaluation (ADVICE r08)
-    head = """
-WITH ps AS MATERIALIZED (
-    SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-),
-pairs AS MATERIALIZED (
-    SELECT a.s AS u, b.s AS v, CAST(COUNT(*) AS BIGINT) AS shared
-    FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
-    GROUP BY a.s, b.s
-),
-stats AS (
-    SELECT CAST(SUM(shared) AS BIGINT) AS s_sum,
-           CAST(COUNT(*) AS BIGINT) AS p_cnt
-    FROM pairs
-),
-eb AS MATERIALIZED (
-    SELECT u, v FROM pairs, stats
-    WHERE shared * p_cnt > s_sum
-      AND 4 * (shared * p_cnt - s_sum) * (shared * p_cnt - s_sum)
-            > 9 * s_sum * p_cnt
-),
+    # the backbone head + symmetric edges; EVERY multiply-referenced
+    # stage MATERIALIZED — each e{i} is referenced three times in stage
+    # i+1 and DuckDB's default inlining would re-evaluate the chain
+    # exponentially
+    head = _SQL_BACKBONE + """,
 e0 AS MATERIALIZED (
     SELECT u AS src, v AS dst FROM eb
     UNION ALL
@@ -844,7 +836,6 @@ def trustrank_quantized(
     edges: DataFrame,
     seeds: DataFrame,
     iterations: int = 3,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """(node, rank_q) after ``iterations`` damped rounds where the
     teleport mass goes ONLY to ``seeds`` (node) — TrustRank (Gyongyi,
@@ -852,26 +843,13 @@ def trustrank_quantized(
     spam-propagation recipe: trust flows outward from a vetted seed set
     instead of raining uniformly. rank' = [node in seeds] * (3*S)//(20*ns)
     + (17*contrib)//20 with ns = |seeds ∩ nodes|; initial mass S//ns on
-    seeds, 0 elsewhere. Same exact integer arithmetic, same loop shape
-    and persist discipline as :func:`pagerank_quantized` (kept separate
-    on purpose: that function's sf10-tuned path stays untouched); the
-    teleport relation is seed-sized and localCheckpointed once."""
-    from pyspark import StorageLevel
-
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    e = edges.join(out_w, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    edges.unpersist()
+    seeds, 0 elsewhere. Shares the weighted-edge build and the per-round
+    contribution sums with :func:`pagerank_quantized` (so with every node
+    a seed the two agree bit for bit); only the teleport term is its
+    own: the seed-sized teleport relation is localCheckpointed once."""
+    e, nodes, bc = _weighted_edges(edges)
     seed_nodes = nodes.join(seeds, "node", "semi").localCheckpoint(eager=True)
     ns_df = seed_nodes.agg(F.count("*").alias("ns"))
-    bc = _node_hinter(e.sparkSession, broadcast, nodes.count)
     tele = (
         seed_nodes.crossJoin(F.broadcast(ns_df))
         .select(
@@ -885,11 +863,7 @@ def trustrank_quantized(
         "node", F.coalesce("t0", F.lit(0)).alias("rank_q")
     )
     for _ in range(iterations):
-        contrib = e.join(bc(ranks), e.src == ranks.node).select(
-            F.col("dst").alias("node"),
-            F.expr("div(rank_q * w, out_w)").alias("c"),
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+        sums = _walk_sums(e, ranks, bc)
         ranks = (
             nodes.join(bc(sums), "node", "left")
             .join(bc(tele), "node", "left")
@@ -1037,9 +1011,7 @@ def _hyperball_rounds(edges: DataFrame, rounds: int):
     long form) and :func:`hyperball_estimates` (per-round ball sizes)."""
     from .sketches import HLL_M, _rank_col
 
-    sym = edges.selectExpr("u AS src", "v AS dst").unionByName(
-        edges.selectExpr("v AS src", "u AS dst")
-    ).localCheckpoint(eager=True)
+    sym = _symmetric_edges(edges).localCheckpoint(eager=True)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     h = F.md5(F.col("node").cast("string"))
     reg0 = F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
@@ -1140,22 +1112,8 @@ def q_graph_hyperball(spark, sf_dir):
     est = hll_estimate_from_registers(regs, ["node"]).withColumnRenamed(
         "hll_estimate", "hll_ball2"
     )
-    sym = edges.selectExpr("u AS src", "v AS dst").unionByName(
-        edges.selectExpr("v AS src", "u AS dst")
-    )
-    a, b = sym.alias("a"), sym.alias("b")
-    ball = (
-        sym.select(F.col("src").alias("node"), F.col("src").alias("x"))
-        .unionByName(sym.select(F.col("src").alias("node"),
-                                F.col("dst").alias("x")))
-        .unionByName(
-            a.join(b, F.col("a.dst") == F.col("b.src")).select(
-                F.col("a.src").alias("node"), F.col("b.dst").alias("x")
-            )
-        )
-        .distinct()
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("exact_ball2"))
+    ball = _exact_ball2(_symmetric_edges(edges)).withColumnRenamed(
+        "ball2", "exact_ball2"
     )
     return est.join(ball, "node").select(
         F.col("node").cast("long").alias("node"),
@@ -1173,26 +1131,7 @@ def _sql_hyperball(rounds: int = 2) -> str:
 
     h = "md5(CAST(node AS VARCHAR))"
     x = _sql_hex_to_long(h, 3, 13)
-    head = """
-WITH ps AS MATERIALIZED (
-    SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-),
-pairs AS MATERIALIZED (
-    SELECT a.s AS u, b.s AS v, CAST(COUNT(*) AS BIGINT) AS shared
-    FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
-    GROUP BY a.s, b.s
-),
-stats AS (
-    SELECT CAST(SUM(shared) AS BIGINT) AS s_sum,
-           CAST(COUNT(*) AS BIGINT) AS p_cnt
-    FROM pairs
-),
-eb AS MATERIALIZED (
-    SELECT u, v FROM pairs, stats
-    WHERE shared * p_cnt > s_sum
-      AND 4 * (shared * p_cnt - s_sum) * (shared * p_cnt - s_sum)
-            > 9 * s_sum * p_cnt
-),
+    head = _SQL_BACKBONE + """,
 e AS MATERIALIZED (
     SELECT u AS src, v AS dst FROM eb
     UNION ALL
@@ -1266,26 +1205,11 @@ def q_graph_harmonic(spark, sf_dir):
         ]
     )
     est_harm = (F.col("b1") - F.col("b0")) + (F.col("b2") - F.col("b1")) / 2
-    sym = edges.selectExpr("u AS src", "v AS dst").unionByName(
-        edges.selectExpr("v AS src", "u AS dst")
-    )
+    sym = _symmetric_edges(edges)
     n1 = sym.groupBy(F.col("src").alias("node")).agg(
         F.count_distinct("dst").alias("n1")
     )
-    a2, b2_ = sym.alias("a"), sym.alias("b")
-    ball2 = (
-        sym.select(F.col("src").alias("node"), F.col("src").alias("x"))
-        .unionByName(sym.select(F.col("src").alias("node"),
-                                F.col("dst").alias("x")))
-        .unionByName(
-            a2.join(b2_, F.col("a.dst") == F.col("b.src")).select(
-                F.col("a.src").alias("node"), F.col("b.dst").alias("x")
-            )
-        )
-        .distinct()
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("ball2"))
-    )
+    ball2 = _exact_ball2(sym)
     exact_harm = (
         F.col("n1") + (F.col("ball2") - F.col("n1") - 1) / F.lit(2.0)
     )
@@ -1309,26 +1233,7 @@ def _sql_harmonic(rounds: int = 2) -> str:
     h = "md5(CAST(node AS VARCHAR))"
     x = _sql_hex_to_long(h, 3, 13)
     alpha = f"CAST({HLL_ALPHA * HLL_M * HLL_M * float(1 << 53)!r} AS DOUBLE)"
-    head = """
-WITH ps AS MATERIALIZED (
-    SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-),
-pairs AS MATERIALIZED (
-    SELECT a.s AS u, b.s AS v, CAST(COUNT(*) AS BIGINT) AS shared
-    FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
-    GROUP BY a.s, b.s
-),
-stats AS (
-    SELECT CAST(SUM(shared) AS BIGINT) AS s_sum,
-           CAST(COUNT(*) AS BIGINT) AS p_cnt
-    FROM pairs
-),
-eb AS MATERIALIZED (
-    SELECT u, v FROM pairs, stats
-    WHERE shared * p_cnt > s_sum
-      AND 4 * (shared * p_cnt - s_sum) * (shared * p_cnt - s_sum)
-            > 9 * s_sum * p_cnt
-),
+    head = _SQL_BACKBONE + """,
 e AS MATERIALIZED (
     SELECT u AS src, v AS dst FROM eb
     UNION ALL

@@ -1011,42 +1011,37 @@ def token_sets_from_shingles(sh: DataFrame) -> DataFrame:
     )
 
 
-def _gate_dfreq(
-    ts: DataFrame, dfreq: DataFrame, broadcast_dfreq: bool | None
-) -> DataFrame:
+def _gate_dfreq(ts: DataFrame, dfreq: DataFrame) -> DataFrame:
     """Shared vocabulary-sized-broadcast gate for the prefix-filter
-    joins (jaccard_prefix_pairs / containment_pairs): True/False force
-    the hint; None auto-decides against the session broadcast threshold
-    using ``approx_count_distinct`` over the CHECKPOINTED token sets
-    ``ts`` — i.e. an HLL estimate of the actual distinct-shingle
-    vocabulary (= the dfreq row count), padded for sketch error.
-    One eager map-side-combined agg over checkpointed longs; unlike a
+    joins (jaccard_prefix_pairs / containment_pairs), decided against
+    the session broadcast threshold using ``approx_count_distinct`` over
+    the CHECKPOINTED token sets ``ts`` — i.e. an HLL estimate of the
+    actual distinct-shingle vocabulary (= the dfreq row count), padded
+    for sketch error. One eager map-side-combined agg over checkpointed
+    longs, skipped when the threshold disables broadcasting; unlike a
     sum(set_size) bound it does NOT overestimate on highly duplicated
     corpora, where total token count exceeds the vocabulary by orders of
     magnitude and would withhold a beneficial broadcast."""
-    if broadcast_dfreq is None and broadcast_threshold_bytes(
-        ts.sparkSession
-    ) > 0:
-        # explicit rsd + a 3-sigma pad: the default HLL rsd is 5%, so a
-        # flat 10% pad could greenlight a broadcast on a ~2-sigma-tail
-        # underestimate
-        rsd = 0.05
-        vocab_est = (
-            ts.select(F.explode("toks").alias("tok"))
-            .agg(F.approx_count_distinct("tok", rsd).alias("v"))
-            .first()[0]
-            or 0
-        )
-        vocab_bound = int(vocab_est * (1.0 + 3.0 * rsd)) + 1
-        return maybe_broadcast(dfreq, est_rows=vocab_bound, bytes_per_row=24)
-    return maybe_broadcast(dfreq, force=bool(broadcast_dfreq))
+    if broadcast_threshold_bytes(ts.sparkSession) <= 0:
+        return dfreq
+    # explicit rsd + a 3-sigma pad: the default HLL rsd is 5%, so a
+    # flat 10% pad could greenlight a broadcast on a ~2-sigma-tail
+    # underestimate
+    rsd = 0.05
+    vocab_est = (
+        ts.select(F.explode("toks").alias("tok"))
+        .agg(F.approx_count_distinct("tok", rsd).alias("v"))
+        .first()[0]
+        or 0
+    )
+    vocab_bound = int(vocab_est * (1.0 + 3.0 * rsd)) + 1
+    return maybe_broadcast(dfreq, est_rows=vocab_bound, bytes_per_row=24)
 
 
 def jaccard_prefix_pairs(
     token_sets: DataFrame,
     t_num: int = JACCARD_T_NUM,
     t_den: int = JACCARD_T_DEN,
-    broadcast_dfreq: bool | None = None,
     prefix_cap: int | None = None,
     shared: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
@@ -1117,10 +1112,10 @@ def jaccard_prefix_pairs(
     prefix-family stages (the cluster-routing recipe runs this join AND
     the hot-family doc extraction) tokenizes and ranks the corpus ONCE
     instead of once per stage. Must have been built with the same
-    ``t_num/t_den/broadcast_dfreq``; default None builds it here.
+    ``t_num/t_den``; default None builds it here.
     """
     keyed, groups, prefix = shared or jaccard_prefix_build(
-        token_sets, t_num, t_den, broadcast_dfreq
+        token_sets, t_num, t_den
     )
     spairs = _jaccard_set_pairs(groups, prefix, t_num, t_den, prefix_cap)
     cross = _expand_set_pairs(
@@ -1138,7 +1133,6 @@ def jaccard_prefix_build(
     token_sets: DataFrame,
     t_num: int = JACCARD_T_NUM,
     t_den: int = JACCARD_T_DEN,
-    broadcast_dfreq: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared tokenize/rank pipeline every Jaccard prefix-family
     entry point derives from: ``(keyed, groups, prefix)`` — the
@@ -1149,14 +1143,13 @@ def jaccard_prefix_build(
     logical corpus scan costs one corpus materialization. ``prefix`` is
     lazy: each consumer re-executes it from the CHECKPOINTED ``groups``,
     so the duplicate cost is window CPU, never a re-scan."""
-    return _prefix_build(token_sets, t_num, t_den, broadcast_dfreq)
+    return _prefix_build(token_sets, t_num, t_den)
 
 
 def _prefix_build(
     token_sets: DataFrame,
     num: int,
     den: int,
-    broadcast_dfreq: bool | None,
     min_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """``(keyed, groups, prefix)`` for the threshold num/den — the one
@@ -1198,7 +1191,7 @@ def _prefix_build(
     # dfreq is one row per distinct shingle — broadcast is right while the
     # vocabulary fits an executor (shingled fixture text: 27k tokens at
     # sf0.1), WRONG at corpus scale where distinct shingles ~ corpus size.
-    # ``broadcast_dfreq`` gates the hint; see _gate_dfreq. When withheld,
+    # _gate_dfreq gates the hint on the vocabulary size. When withheld,
     # the join and the doc_id window below run as two ordinary shuffles
     # and nothing else changes.
     # Both sides of the Jaccard candidate self-join consume `prefix`, so
@@ -1210,7 +1203,7 @@ def _prefix_build(
     # to executor CPU, add .localCheckpoint(eager=False) here and
     # re-measure.
     prefix = (
-        sh.join(_gate_dfreq(ts, dfreq, broadcast_dfreq), "tok")
+        sh.join(_gate_dfreq(ts, dfreq), "tok")
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= plen)
         .select("doc_id", "tok", "set_size", "rk", "mult")
@@ -1423,16 +1416,13 @@ def jaccard_prefix_hot_tokens(
     token_sets: DataFrame,
     t_num: int = JACCARD_T_NUM,
     t_den: int = JACCARD_T_DEN,
-    broadcast_dfreq: bool | None = None,
     prefix_cap: int = 0,
 ) -> DataFrame:
     """The accounting twin of a ``prefix_cap``-bounded run: (tok, n_docs)
     for every prefix token the capped join refuses to generate candidates
     from — exactly the drop a capped run makes, built from the same
     prefix construction so report and join can never disagree."""
-    _keyed, _groups, prefix = _prefix_build(
-        token_sets, t_num, t_den, broadcast_dfreq
-    )
+    _keyed, _groups, prefix = _prefix_build(token_sets, t_num, t_den)
     return _hot_prefix_tokens(prefix, prefix_cap)
 
 
@@ -1440,7 +1430,6 @@ def jaccard_hot_family_docs(
     token_sets: DataFrame,
     t_num: int = JACCARD_T_NUM,
     t_den: int = JACCARD_T_DEN,
-    broadcast_dfreq: bool | None = None,
     prefix_cap: int = 0,
     shared: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
@@ -1464,7 +1453,7 @@ def jaccard_hot_family_docs(
     :func:`jaccard_prefix_pairs`.
     """
     keyed, _groups, prefix = shared or jaccard_prefix_build(
-        token_sets, t_num, t_den, broadcast_dfreq
+        token_sets, t_num, t_den
     )
     hot = _hot_prefix_tokens(prefix, prefix_cap)
     hot_skeys = (
@@ -1511,7 +1500,6 @@ def jaccard_prefix_with_cluster_routing(
     prefix_cap: int,
     t_num: int = JACCARD_T_NUM,
     t_den: int = JACCARD_T_DEN,
-    broadcast_dfreq: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The documented recipe for corpora with giant families of DISTINCT
     near-identical sets (SCALING.md Hazard 2's remaining exposure):
@@ -1537,12 +1525,12 @@ def jaccard_prefix_with_cluster_routing(
     # build the tokenize/rank pipeline ONCE and thread it into both arms
     # (the capped join and the hot-family extraction): one eager corpus
     # materialization and one prefix ranking, not two of each
-    shared = jaccard_prefix_build(ts, t_num, t_den, broadcast_dfreq)
+    shared = jaccard_prefix_build(ts, t_num, t_den)
     pairs = jaccard_prefix_pairs(
-        ts, t_num, t_den, broadcast_dfreq, prefix_cap, shared=shared
+        ts, t_num, t_den, prefix_cap=prefix_cap, shared=shared
     )
     routed = jaccard_hot_family_docs(
-        ts, t_num, t_den, broadcast_dfreq, prefix_cap, shared=shared
+        ts, t_num, t_den, prefix_cap=prefix_cap, shared=shared
     )
     hot_docs = docs.join(routed, "doc_id", "semi").localCheckpoint(
         eager=True
@@ -2052,7 +2040,6 @@ def containment_pairs(
     c_num: int = CONT_C_NUM,
     c_den: int = CONT_C_DEN,
     min_size: int = CONT_MIN_SIZE,
-    broadcast_dfreq: bool | None = None,
     prefix_cap: int | None = None,
 ) -> DataFrame:
     """Ordered pairs (doc_inner, doc_outer, intersection, containment)
@@ -2086,9 +2073,7 @@ def containment_pairs(
     hash-collision caveat) and the prefix construction
     (:func:`_prefix_build`) with ``jaccard_prefix_pairs``.
     """
-    keyed, groups, prefix = _prefix_build(
-        token_sets, c_num, c_den, broadcast_dfreq, min_size
-    )
+    keyed, groups, prefix = _prefix_build(token_sets, c_num, c_den, min_size)
     spairs = _containment_set_pairs(groups, prefix, c_num, c_den, prefix_cap)
     cross = _expand_set_pairs(
         spairs, keyed, "doc_inner", "doc_outer",
@@ -2105,16 +2090,13 @@ def containment_hot_tokens(
     c_num: int = CONT_C_NUM,
     c_den: int = CONT_C_DEN,
     min_size: int = CONT_MIN_SIZE,
-    broadcast_dfreq: bool | None = None,
     prefix_cap: int = 0,
 ) -> DataFrame:
     """Accounting twin of a ``prefix_cap``-bounded containment run:
     (tok, n_docs) for every INNER-prefix token the capped join refuses to
     generate candidates from (same construction as the join — see
     ``jaccard_prefix_hot_tokens``)."""
-    _keyed, _groups, prefix = _prefix_build(
-        token_sets, c_num, c_den, broadcast_dfreq, min_size
-    )
+    _keyed, _groups, prefix = _prefix_build(token_sets, c_num, c_den, min_size)
     return _hot_prefix_tokens(prefix, prefix_cap)
 
 

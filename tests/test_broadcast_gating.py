@@ -1,12 +1,16 @@
 """Broadcast-fallback gating (VERDICT r05 items 2-3).
 
 The graph fixpoints and PPJoin's dfreq join used to FORCE node-sized /
-vocab-sized broadcasts; at 100x scale that hint is wrong. These tests
-pin the new behavior:
+vocab-sized broadcasts; at 100x scale that hint is wrong. Their hints
+now go through size gates, and ``spark.sql.autoBroadcastJoinThreshold``
+is the one switch that controls them. These tests pin:
 
-- forcing the non-broadcast path (``broadcast=False`` / threshold -1)
-  produces oracle-identical output for pagerank, khop, LPA and the
-  prefix-filtered Jaccard join — the fallback is a real, executable plan;
+- at threshold -1 pagerank, khop, LPA, the triangle census and the
+  prefix-filtered Jaccard and containment joins give the same output as
+  at the default — the fallback is a real, executable plan;
+- at the default threshold the gates do hint: a join over the node
+  gate's or the dfreq gate's output plans as a BroadcastHashJoin even
+  where Catalyst's own size estimate would not broadcast;
 - the plan actually changes: with the hint withheld and auto-broadcast
   disabled, no BroadcastHashJoin remains in the loop joins;
 - ``maybe_broadcast``'s size gate respects the session threshold.
@@ -20,11 +24,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandas_etl_framework_spark.graph import (
+    _node_hinter,
     khop_distances,
     label_propagation,
     pagerank_quantized,
 )
 from pandas_etl_framework_spark.llmops.dedup import (
+    _gate_dfreq,
     jaccard_prefix_pairs,
     token_sets_df,
 )
@@ -63,11 +69,44 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_pagerank_broadcast_off_identical(spark):
+def _huge(spark, name):
+    # a relation Catalyst sizes far past any broadcast threshold, so a
+    # BroadcastHashJoin over it can only come from an explicit hint
+    return spark.range(10**12).withColumnRenamed("id", name)
+
+
+def _assert_dfreq_gate_hints(spark, ts):
+    # at the default threshold the vocabulary estimate over ``ts`` fits,
+    # so the dfreq join plans as a broadcast whatever Catalyst's own size
+    # estimate of the dfreq relation; at -1 the relation comes back as is
+    dfreq = _huge(spark, "tok")
+    sh = ts.select(F.explode("toks").alias("tok"))
+    joined = sh.join(_gate_dfreq(ts, dfreq), "tok")
+    assert explain_summary(joined).get("BroadcastHashJoin", 0) >= 1
+    with _threshold(spark, -1):
+        assert _gate_dfreq(ts, dfreq) is dfreq
+
+
+def test_node_gate_hints_graph_loop_join(spark):
+    # the node gate behind every graph loop join: at the default threshold
+    # it hints the node-sized side, so the loop join plans as a broadcast
+    # (pagerank's own loop hides its plan behind localCheckpoint, so the
+    # gate is driven directly with the loop join's shape); at -1 it hands
+    # the relation back untouched without running the node count
     e = _edges(spark)
-    base = _sorted(pagerank_quantized(e, iterations=3))
-    off = _sorted(pagerank_quantized(e, iterations=3, broadcast=False))
-    assert base == off and len(base) == 7
+    ranks = _huge(spark, "node")
+    bc = _node_hinter(spark, lambda: 7)
+    joined = e.join(bc(ranks), e.src == ranks.node)
+    assert explain_summary(joined).get("BroadcastHashJoin", 0) >= 1
+    assert explain_summary(e.join(ranks, e.src == ranks.node)).get(
+        "BroadcastHashJoin", 0
+    ) == 0
+
+    def no_count():
+        raise AssertionError("node count ran with broadcasting disabled")
+
+    with _threshold(spark, -1):
+        assert _node_hinter(spark, no_count)(ranks) is ranks
 
 
 def test_pagerank_threshold_disabled_auto_identical(spark):
@@ -75,17 +114,16 @@ def test_pagerank_threshold_disabled_auto_identical(spark):
     base = _sorted(pagerank_quantized(e, iterations=3))
     with _threshold(spark, -1):
         gated = _sorted(pagerank_quantized(e, iterations=3))
-    assert base == gated
+    assert base == gated and len(base) == 7
 
 
 def test_khop_broadcast_off_identical(spark):
     e = _edges(spark)
     seeds = spark.createDataFrame([(0,)], "node long")
     base = _sorted(khop_distances(e, seeds, hops=3))
-    off = _sorted(khop_distances(e, seeds, hops=3, broadcast=False))
     with _threshold(spark, -1):
         gated = _sorted(khop_distances(e, seeds, hops=3))
-    assert base == off == gated
+    assert base == gated
     # sanity: BFS distances are correct on the known graph — node 5 is
     # exactly 3 hops from the seed (0->2->3->5); node 6 is beyond the cap
     d = dict(base)
@@ -98,10 +136,9 @@ def test_lpa_broadcast_off_identical(spark):
         "u long, v long",
     )
     base = _sorted(label_propagation(und, rounds=2))
-    off = _sorted(label_propagation(und, rounds=2, broadcast=False))
     with _threshold(spark, -1):
         gated = _sorted(label_propagation(und, rounds=2))
-    assert base == off == gated
+    assert base == gated
 
 
 def test_jaccard_prefix_broadcast_off_identical(spark):
@@ -116,12 +153,11 @@ def test_jaccard_prefix_broadcast_off_identical(spark):
     )
     ts = token_sets_df(docs)
     base = _sorted(jaccard_prefix_pairs(ts))
-    off = _sorted(jaccard_prefix_pairs(ts, broadcast_dfreq=False))
-    on = _sorted(jaccard_prefix_pairs(ts, broadcast_dfreq=True))
     with _threshold(spark, -1):
         gated = _sorted(jaccard_prefix_pairs(ts))
-    assert base == off == on == gated
+    assert base == gated
     assert (1, 4) in {(a, b) for (a, b, *_rest) in base}
+    _assert_dfreq_gate_hints(spark, ts)
 
 
 def test_triangle_count_broadcast_off_identical(spark):
@@ -131,10 +167,9 @@ def test_triangle_count_broadcast_off_identical(spark):
         [(u, v) for u in range(4) for v in range(u + 1, 4)], "u long, v long"
     )
     base = triangle_count(k4).collect()[0]
-    off = triangle_count(k4, broadcast=False).collect()[0]
     with _threshold(spark, -1):
         gated = triangle_count(k4).collect()[0]
-    assert tuple(base) == tuple(off) == tuple(gated)
+    assert tuple(base) == tuple(gated)
     assert base["n_triangles"] == 4 and base["n_wedges"] == 12
 
 
@@ -171,13 +206,12 @@ def test_containment_broadcast_off_identical(spark):
     )
     ts = token_sets_df(docs)
     base = _sorted(containment_pairs(ts, min_size=5))
-    off = _sorted(containment_pairs(ts, min_size=5, broadcast_dfreq=False))
-    on = _sorted(containment_pairs(ts, min_size=5, broadcast_dfreq=True))
     with _threshold(spark, -1):
         gated = _sorted(containment_pairs(ts, min_size=5))
-    assert base == off == on == gated
+    assert base == gated
     # doc 1's shingles are a prefix of doc 2's -> containment pair exists
     assert any(a == 1 and b == 2 for (a, b, *_r) in base)
+    _assert_dfreq_gate_hints(spark, ts)
 
 
 def test_vocab_table_joins_gate_on_threshold(spark):
@@ -210,7 +244,6 @@ def test_maybe_broadcast_size_gate(spark):
     assert big is df
     with _threshold(spark, -1):
         assert maybe_broadcast(df) is df
-    assert maybe_broadcast(df, force=False) is df
 
 
 def test_broadcast_threshold_parsing(spark):

@@ -233,6 +233,28 @@ def test_trustrank_teleports_only_to_seeds(spark):
     assert sum(tr.values()) >= PR_SCALE - 100     # ...up to floor loss
 
 
+def test_trustrank_all_seeds_equals_pagerank(spark):
+    """With every node a seed the teleport is uniform, so TrustRank is
+    PageRank: the shared weighted-edge build and per-round sums must
+    give identical integer ranks row for row (uneven weights, a sink
+    and a sourceless node included)."""
+    from pandas_etl_framework_spark.graph import (
+        pagerank_quantized,
+        trustrank_quantized,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2, 3), (2, 3, 1), (3, 1, 2), (1, 3, 5), (4, 1, 1), (3, 5, 2)],
+        "src long, dst long, w long",
+    )
+    nodes = edges.selectExpr("src AS node").union(
+        edges.selectExpr("dst AS node")
+    ).distinct()
+    tr = sorted(map(tuple, trustrank_quantized(edges, nodes, 4).collect()))
+    pr = sorted(map(tuple, pagerank_quantized(edges, 4).collect()))
+    assert tr == pr and len(pr) == 5
+
+
 def test_hyperball_estimates_per_round_match_direct_ball_estimates(spark):
     """hyperball_estimates' per-round ball sizes must equal the HLL
     estimate of the exact ball membership at every t — the per-round

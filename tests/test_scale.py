@@ -364,7 +364,8 @@ def test_zorder_buckets_narrow_both_dimensions(spark):
         assert r["x_max"] - r["x_min"] <= 63, r
         assert r["y_max"] - r["y_min"] <= 63, r
 
-    # interleave mirror on hand values
+    # interleave mirror on hand values; negative inputs interleave their
+    # two's-complement low bits, so z stays in [0, 4^bits)
     def morton(x, y, bits=ZORDER_BITS):
         z = 0
         for i in range(bits):
@@ -373,7 +374,7 @@ def test_zorder_buckets_narrow_both_dimensions(spark):
         return z
 
     df = spark.createDataFrame(
-        [(x, y) for x in (0, 1, 5, 255) for y in (0, 2, 7, 255)],
+        [(x, y) for x in (0, 1, 5, 255, -1, -6) for y in (0, 2, 7, 255, -3)],
         "x long, y long",
     )
     got = df.select(
