@@ -15,6 +15,12 @@ explicit ``partition_by`` override for reference-identical layouts.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -218,3 +224,46 @@ def create_dataframe_with_schema(
     avoids the RDD API entirely).
     """
     return spark.createDataFrame([], schema)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh scratch directory for one harness round-trip (sink,
+    checkpoint, store), removed on every exit.
+
+    The directory is created under ``SPARK_GRAFT_STREAM_SINK_ROOT`` when
+    that is set, and under the local temp dir otherwise. The default is
+    correct in local mode only: on a multi-node cluster executors do not
+    share the driver's temp dir, and whatever they write (parquet sinks,
+    checkpoints, stores) must live on storage every node reaches. Point
+    the variable at such a path (NFS, HDFS mount, object-store FUSE);
+    each call makes its own unique subdir under it."""
+    root = os.environ.get("SPARK_GRAFT_STREAM_SINK_ROOT") or None
+    if root:
+        os.makedirs(root, exist_ok=True)
+    path = tempfile.mkdtemp(prefix=prefix, dir=root)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@contextmanager
+def state_store_partitions(spark: SparkSession) -> Iterator[None]:
+    """Scope ``spark.sql.shuffle.partitions`` to 8 for a one-shot stream,
+    restoring the previous value on every exit.
+
+    The rule: size the state store to the STATE, not the input. A
+    stateful stream pins its shuffle partition count in the checkpoint
+    at the first micro-batch, and the harness streams keep small state
+    (window x type aggregates, one tuple per user, per-batch store
+    partials). 32 state partitions cost ~0.5 s of per-batch task and
+    state-store overhead there; 8 is right-sized, and the same rule
+    holds on a cluster. Each harness run uses a fresh checkpoint, so
+    the pin never leaks across queries."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -18,15 +18,10 @@ layout at any scale.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
 from . import io as eio
-
-
-def _scratch() -> str:
-    return tempfile.mkdtemp(prefix="etl_io_q_")
 
 
 def q_io_csv_roundtrip(spark, sf_dir):
@@ -34,16 +29,12 @@ def q_io_csv_roundtrip(spark, sf_dir):
     ``read_csv`` with the parquet schema (explicit schema, per the
     docstring's hash-stability rule) → the original rows."""
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/region_csv"
         src.write.option("header", "true").csv(path)
-        out = eio.read_csv(spark, path, schema=src.schema).localCheckpoint(
+        return eio.read_csv(spark, path, schema=src.schema).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_CSV_ROUNDTRIP = "SELECT * FROM region"
@@ -58,13 +49,12 @@ def q_io_partitioned_sink(spark, sf_dir):
     src = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/orders_by_status"
         eio.write_table(
             src, path, mode="overwrite", partition_by=["o_orderstatus"]
         )
-        out = (
+        return (
             eio.read_table(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -75,9 +65,6 @@ def q_io_partitioned_sink(spark, sf_dir):
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_PARTITIONED_SINK = """
@@ -96,22 +83,19 @@ def q_io_store_reset(spark, sf_dir):
     and bootstrap an empty relation with the original schema — the
     reference's simulation-reset path (main.py:27-28) end to end."""
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/store"
         eio.write_store(src, path, partition_by=[], mode="overwrite")
         n_before = eio.read_parquet_df(spark, path).count()
         deleted = eio.delete_store(spark, path)
         gone = eio.read_parquet_df(spark, path)
         boot = eio.create_dataframe_with_schema(spark, src.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.range(1).select(
-        F.lit(n_before).cast("long").alias("n_before"),
-        F.lit(deleted).alias("deleted"),
-        F.lit(gone is None).alias("reader_returned_none"),
-        F.lit(boot.count()).cast("long").alias("n_bootstrap"),
-    )
+        return spark.range(1).select(
+            F.lit(n_before).cast("long").alias("n_before"),
+            F.lit(deleted).alias("deleted"),
+            F.lit(gone is None).alias("reader_returned_none"),
+            F.lit(boot.count()).cast("long").alias("n_bootstrap"),
+        )
 
 
 SQL_IO_STORE_RESET = """
@@ -137,8 +121,7 @@ def q_cdc_simulate_runs(spark, sf_dir):
         orders_batch2,
     )
 
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         store = simulate_runs(
             spark,
             {
@@ -149,10 +132,7 @@ def q_cdc_simulate_runs(spark, sf_dir):
             ["o_orderkey"],
             load_ts_by_run={"run1": RUN1_TS, "run2": RUN2_TS},
         )
-        out = store.select(*STAMPED_COLS).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return store.select(*STAMPED_COLS).localCheckpoint(eager=True)
 
 
 def _sql_cdc_simulate_runs() -> str:
@@ -165,32 +145,24 @@ def q_io_orc_roundtrip(spark, sf_dir):
     """Generic-format sink/source round-trip through ORC — the columnar
     alternate with the same pushdown machinery as parquet."""
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/region_orc"
         eio.write_table(src, path, fmt="orc", mode="overwrite")
-        out = eio.read_table(spark, path, fmt="orc").localCheckpoint(
+        return eio.read_table(spark, path, fmt="orc").localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_io_json_roundtrip(spark, sf_dir):
     """JSON-lines round-trip with an explicit schema on the way back in
     (inference would widen integers and break dtype parity)."""
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/region_json"
         eio.write_table(src, path, fmt="json", mode="overwrite")
-        out = eio.read_table(
+        return eio.read_table(
             spark, path, fmt="json", schema=src.schema
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_io_xml_roundtrip(spark, sf_dir):
@@ -206,20 +178,16 @@ def q_io_xml_roundtrip(spark, sf_dir):
     the pin, padded, empty and NULL strings all come back
     byte-identical)."""
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/region_xml"
         eio.write_table(
             src, path, fmt="xml", mode="overwrite",
             rootTag="regions", rowTag="region",
         )
-        out = eio.read_table(
+        return eio.read_table(
             spark, path, fmt="xml", schema=src.schema, rowTag="region",
             ignoreSurroundingSpaces="false",
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_FMT_ROUNDTRIP = "SELECT * FROM region"
@@ -244,14 +212,13 @@ def q_io_schema_evolution(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
         "o_orderstatus",
     )
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         store = f"{tmp}/orders_epochs"
         src.filter("o_orderkey % 2 = 0").drop("o_orderstatus").write.parquet(
             f"{store}/epoch=1"
         )
         src.filter("o_orderkey % 2 = 1").write.parquet(f"{store}/epoch=2")
-        out = (
+        return (
             spark.read.option("mergeSchema", "true")
             .parquet(store)
             .select(
@@ -260,9 +227,6 @@ def q_io_schema_evolution(spark, sf_dir):
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_SCHEMA_EVOLUTION = """
@@ -311,8 +275,7 @@ def q_io_corrupt_records(spark, sf_dir):
     src = spark.read.parquet(f"{sf_dir}/region.parquet").select(
         "r_regionkey", "r_name"
     )
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/region_jsonl"
         lines = src.select(
             F.to_json(F.struct("r_regionkey", "r_name")).alias("value")
@@ -322,7 +285,7 @@ def q_io_corrupt_records(spark, sf_dir):
             )
         )
         lines.write.text(path)
-        out = (
+        return (
             spark.read.schema(
                 "r_regionkey long, r_name string, corrupt string"
             )
@@ -331,9 +294,6 @@ def q_io_corrupt_records(spark, sf_dir):
             .json(path)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _sql_io_corrupt_records() -> str:
@@ -394,8 +354,7 @@ def q_io_binary_source(spark, sf_dir):
             ).alias("blob"),
         )
     )
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         blob_dir = f"{tmp}/blobs"
         os.makedirs(blob_dir, exist_ok=True)
 
@@ -408,7 +367,7 @@ def q_io_binary_source(spark, sf_dir):
 
         src.mapInPandas(write_blobs, "doc_id long").count()
 
-        out = (
+        return (
             spark.read.format("binaryFile")
             .load(f"{blob_dir}/*.bin")
             .select(
@@ -418,9 +377,6 @@ def q_io_binary_source(spark, sf_dir):
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_BINARY_SOURCE = f"""
@@ -461,8 +417,7 @@ def q_versioned_store_lifecycle(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("long")
     ).cast("long")
 
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         store = VersionedStore(spark, f"{tmp}/vstore")
         v0 = store.write(b1, mode="overwrite")
         store.merge(b2, ["o_orderkey"])
@@ -477,10 +432,7 @@ def q_versioned_store_lifecycle(spark, sf_dir):
             F.lit(final.count()).cast("long").alias("final_rows"),
             F.lit(fin_cents).cast("long").alias("final_price_cents"),
         )
-        out = row.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return row.localCheckpoint(eager=True)
 
 
 SQL_VERSIONED_STORE_LIFECYCLE = """
@@ -516,8 +468,7 @@ def q_io_csv_corrupt_routing(spark, sf_dir):
     from pyspark.sql import types as T
 
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         path = f"{tmp}/landing.csv"
         rows = src.select("r_regionkey", "r_name").collect()
         with open(path, "w") as fh:
@@ -541,7 +492,7 @@ def q_io_csv_corrupt_routing(spark, sf_dir):
             .option("columnNameOfCorruptRecord", "_corrupt_record")
             .csv(path)
         )
-        out = parsed.select(
+        return parsed.select(
             F.coalesce(
                 F.col("r_regionkey"),
                 # recover the key from the quarantined raw line so the
@@ -556,9 +507,6 @@ def q_io_csv_corrupt_routing(spark, sf_dir):
             ).alias("r_name"),
             F.col("_corrupt_record").isNotNull().alias("quarantined"),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_CSV_CORRUPT_ROUTING = """
@@ -582,8 +530,7 @@ def q_streaming_cdc_historize(spark, sf_dir):
     from .harness import ORDERS_COLS, orders_batch1, orders_batch2
     from .streaming.historize import streaming_historize_append
 
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         src, store, ckpt = f"{tmp}/src", f"{tmp}/store", f"{tmp}/ckpt"
         b1 = orders_batch1(spark, sf_dir)
         b2 = orders_batch2(spark, sf_dir)
@@ -597,14 +544,11 @@ def q_streaming_cdc_historize(spark, sf_dir):
             q.awaitTermination()
             if _ == 0:
                 b2.write.mode("append").parquet(src)
-        out = (
+        return (
             eio.read_parquet_df(spark, store)
             .select(*ORDERS_COLS, "KEY_HASH", "RECORD_HASH")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _sql_streaming_cdc_historize() -> str:
@@ -647,8 +591,7 @@ def q_streaming_cdc_redelivery(spark, sf_dir):
     from .harness import ORDERS_COLS, orders_batch1, orders_batch2
     from .streaming.historize import streaming_historize_append
 
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         src, store = f"{tmp}/src", f"{tmp}/store"
         ckpt, snap = f"{tmp}/ckpt", f"{tmp}/ckpt_snapshot"
         b1 = orders_batch1(spark, sf_dir)
@@ -670,14 +613,11 @@ def q_streaming_cdc_redelivery(spark, sf_dir):
         shutil.rmtree(ckpt)
         shutil.copytree(snap, ckpt)                  # lose the offset commit
         run_once()                                   # run 3: REDELIVERY
-        out = (
+        return (
             eio.read_parquet_df(spark, store)
             .select(*ORDERS_COLS, "KEY_HASH", "RECORD_HASH")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_io_jdbc_roundtrip(spark, sf_dir):
@@ -688,8 +628,7 @@ def q_io_jdbc_roundtrip(spark, sf_dir):
     coverage'; the partitioned read exercises the parallel-cursor path a
     production extract uses against a warehouse."""
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         url = f"jdbc:derby:{tmp}/db;create=true"
         eio.write_jdbc(src, url, "region_rt", mode="overwrite")
         back = eio.read_jdbc(
@@ -703,15 +642,12 @@ def q_io_jdbc_roundtrip(spark, sf_dir):
         )
         # pin dtypes back to the parquet schema (JDBC type mapping may
         # widen); the driver comparator is dtype-strict
-        out = back.select(
+        return back.select(
             *[
                 F.col(f.name).cast(f.dataType).alias(f.name)
                 for f in src.schema.fields
             ]
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 SQL_IO_JDBC_ROUNDTRIP = "SELECT * FROM region"
@@ -743,8 +679,7 @@ def q_streaming_scd2_merge(spark, sf_dir):
     from .scd2_store import Scd2Store
     from .streaming.historize import streaming_scd2_merge
 
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         src, store, ckpt = f"{tmp}/src", f"{tmp}/store", f"{tmp}/ckpt"
         b1 = orders_batch1(spark, sf_dir)
         b2 = orders_batch2(spark, sf_dir)
@@ -769,15 +704,12 @@ def q_streaming_scd2_merge(spark, sf_dir):
             q.awaitTermination()
             if i == 0:
                 b2.write.mode("append").parquet(src)
-        out = (
+        return (
             Scd2Store(spark, store)
             .read()
             .select(*SCD2_COLS)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_io_read_current_hashes(spark, sf_dir):
@@ -789,16 +721,12 @@ def q_io_read_current_hashes(spark, sf_dir):
     VALUES the pruned scan returns."""
     from .harness import stamped1
 
-    tmp = _scratch()
-    try:
+    with eio.scratch_dir("etl_io_q_") as tmp:
         store = f"{tmp}/current"
         eio.write_store(stamped1(spark, sf_dir), store)
-        out = eio.read_current_hashes(spark, store).localCheckpoint(
+        return eio.read_current_hashes(spark, store).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _sql_io_read_current_hashes() -> str:

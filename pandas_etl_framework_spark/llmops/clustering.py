@@ -1045,13 +1045,11 @@ def q_emb_ivfpq_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     emb_ivfpq_topk, so the round-trip must be hash-identical to the
     in-memory search — a dropped column, a partition-column type change,
     or a codebook row lost in serialization each flips the row red."""
-    import shutil
-    import tempfile
+    from ..io import scratch_dir
 
     e, crows, codes, books = _ivfpq_index(spark, sf_dir)
     qv = [int(x) for x in e.filter(F.col("vec_id") == 0).first()["vq"]]
-    tmp = tempfile.mkdtemp(prefix="etl_ivfpq_")
-    try:
+    with scratch_dir("etl_ivfpq_") as tmp:
         ivfpq_write(spark, tmp, crows, books, codes)
         crows2, books2, codes2 = ivfpq_read(spark, tmp)
         # rerank against a FRESH scan of the source table: nothing from
@@ -1060,12 +1058,9 @@ def q_emb_ivfpq_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         e2 = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", F.expr(_VQ_EXPR).alias("vq")
         )
-        out = ivfpq_search(e2, crows2, codes2, books2, qv).localCheckpoint(
+        return ivfpq_search(e2, crows2, codes2, books2, qv).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_emb_ivfpq_add_batch(spark: SparkSession, sf_dir: str) -> DataFrame:

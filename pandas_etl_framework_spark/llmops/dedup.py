@@ -1777,14 +1777,7 @@ def _run_incremental_stream(
     two runs because both share one checkpoint dir (the engine
     continues numbering on restart), so run 2 can never overwrite a
     run-1 partition."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    src = f"{tmp}/src"
-    store = f"{tmp}/store"
-    sink = f"{tmp}/sink"
-    ckpt = f"{tmp}/ckpt"
+    from ..io import scratch_dir, state_store_partitions
 
     def handle(df, bid):
         process_batch(df, store, sink, bid)
@@ -1810,18 +1803,14 @@ def _run_incremental_stream(
         w = df.repartition(src_files) if src_files else df
         w.write.mode("overwrite" if first else "append").parquet(src)
 
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scratch_dir(prefix) as tmp, state_store_partitions(spark):
+        src, store = f"{tmp}/src", f"{tmp}/store"
+        sink, ckpt = f"{tmp}/sink", f"{tmp}/ckpt"
         write_src(corpus, first=True)
         run_once(corpus.schema)        # run 1: corpus bootstraps the store
         write_src(batch)
         run_once(corpus.schema)        # run 2: the new batch streams in
-        out = resolve(store, sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return resolve(store, sink).localCheckpoint(eager=True)
 
 
 def q_dedup_incremental(spark, sf_dir):
@@ -1898,22 +1887,17 @@ def q_dedup_minhash_band_store(spark, sf_dir):
     drift, truncation) is a hash mismatch — this is what makes
     'you never re-shingle history' an executed claim instead of a
     docstring."""
-    import shutil
-    import tempfile
+    from ..io import scratch_dir
 
     batch_bands, corpus_bands = _incremental_bands(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="etl_band_store_")
-    try:
+    with scratch_dir("etl_band_store_") as tmp:
         corpus_bands.write.mode("overwrite").partitionBy("band").parquet(tmp)
         stored = spark.read.parquet(tmp).select(
             "doc_id", F.col("band").cast("long").alias("band"), "band_key"
         )
-        out = incremental_minhash_candidates(
+        return incremental_minhash_candidates(
             batch_bands, stored
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_streaming_minhash_incremental(
@@ -2742,23 +2726,18 @@ def q_dedup_lines_store(spark, sf_dir):
     column drift) is a hash mismatch. This is what makes 'history is
     only ever touched through its constant-width store' an executed
     claim."""
-    import shutil
-    import tempfile
+    from ..io import scratch_dir
 
     corpus = _line_corpus(spark, sf_dir)
     store = line_count_store(
         corpus.filter(F.col("source") != INCR_BATCH_SOURCE)
     )
-    tmp = tempfile.mkdtemp(prefix="etl_line_store_")
-    try:
+    with scratch_dir("etl_line_store_") as tmp:
         store.write.mode("overwrite").parquet(tmp)
-        out = incremental_line_dedup(
+        return incremental_line_dedup(
             corpus.filter(F.col("source") == INCR_BATCH_SOURCE),
             spark.read.parquet(tmp),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_streaming_lines_incremental(
@@ -3406,23 +3385,18 @@ def q_dedup_substrings_store(spark, sf_dir):
     parquet, READ BACK, probed by the batch — same oracle as the
     recompute, so round-trip mangling (count widening, owner column
     drift) is a hash mismatch."""
-    import shutil
-    import tempfile
+    from ..io import scratch_dir
 
     docs = _docs(spark, sf_dir)
     store = substring_window_store(
         docs.filter(F.col("source") != INCR_BATCH_SOURCE)
     )
-    tmp = tempfile.mkdtemp(prefix="etl_substr_store_")
-    try:
+    with scratch_dir("etl_substr_store_") as tmp:
         store.write.mode("overwrite").parquet(tmp)
-        out = incremental_substring_dedup(
+        return incremental_substring_dedup(
             docs.filter(F.col("source") == INCR_BATCH_SOURCE),
             spark.read.parquet(tmp),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_streaming_substrings_incremental(

@@ -1554,22 +1554,17 @@ def q_text_bm25_incremental(spark, sf_dir):
     granularity — the tokenize/explode/aggregate of old batches is never
     redone — and per-term/per-corpus statistics fold at probe time.
     """
-    import shutil
-    import tempfile
+    from ..io import scratch_dir
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "source"
     )
     hist_tf = _term_freq_of(docs.filter(F.col("source") != BM25_BATCH_SOURCE))
     batch_tf = _term_freq_of(docs.filter(F.col("source") == BM25_BATCH_SOURCE))
-    tmp = tempfile.mkdtemp(prefix="etl_bm25_store_")
-    try:
+    with scratch_dir("etl_bm25_store_") as tmp:
         hist_tf.write.mode("overwrite").parquet(tmp)
         combined = spark.read.parquet(tmp).unionByName(batch_tf)
-        out = bm25_topk(combined).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return bm25_topk(combined).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------

@@ -253,17 +253,13 @@ def q_streaming_hll_registers(
     ``max_files_per_trigger``/``src_files``/``replay_each_batch`` exist
     for the chopping/redelivery pytest only; driver paths leave them
     unset."""
-    import shutil
-    import tempfile
-
+    from .io import scratch_dir, state_store_partitions
     from .llmops.dedup import _idempotent_batch_write
 
     keys = ["o_orderpriority"]
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         *keys, "o_custkey"
     )
-    tmp = tempfile.mkdtemp(prefix="etl_stream_hll_")
-    src, store, ckpt = f"{tmp}/src", f"{tmp}/store", f"{tmp}/ckpt"
 
     def handle(batch_df, bid):
         regs = hll_registers(batch_df, "o_custkey", keys)
@@ -271,9 +267,8 @@ def q_streaming_hll_registers(
         if replay_each_batch:
             _idempotent_batch_write(regs, store, bid)
 
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scratch_dir("etl_stream_hll_") as tmp, state_store_partitions(spark):
+        src, store, ckpt = f"{tmp}/src", f"{tmp}/store", f"{tmp}/ckpt"
         w = orders.repartition(src_files) if src_files else orders
         w.write.mode("overwrite").parquet(src)
         reader = spark.readStream.schema(orders.schema)
@@ -299,7 +294,7 @@ def q_streaming_hll_registers(
         exact = orders.groupBy(*keys).agg(
             F.countDistinct("o_custkey").alias("exact_distinct")
         )
-        out = (
+        return (
             est.join(exact, keys)
             .select(
                 *keys,
@@ -312,10 +307,6 @@ def q_streaming_hll_registers(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------

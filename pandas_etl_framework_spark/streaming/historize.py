@@ -16,6 +16,31 @@ from ..cdc import historize_append
 from ..meta_columns import create_currents
 
 
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    output_mode: str,
+    checkpoint_path: str,
+    process_batch,
+    trigger_once: bool,
+):
+    """Start ``stream_df`` with ``process_batch(batch_df)`` on every
+    non-empty micro-batch; ``trigger_once`` runs the files available now
+    and stops."""
+
+    def handle(batch_df: DataFrame, _batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process_batch(batch_df)
+
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_path)
+        .foreachBatch(handle)
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def streaming_historize_append(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -32,27 +57,19 @@ def streaming_historize_append(
     by batch id), mirroring one reference "run" per micro-batch.
     """
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        currents = create_currents()
+    def process_batch(batch_df: DataFrame) -> None:
         historize_append(
             spark,
             batch_df,
             store_path,
             key_columns,
-            currents=currents,
+            currents=create_currents(),
             record_hash_exclude_columns=record_hash_exclude_columns,
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process_batch)
+    return _start_foreach_batch(
+        stream_df, "update", checkpoint_path, process_batch, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_dedup(
@@ -94,20 +111,13 @@ def streaming_versioned_append(
     from ..versioned_store import VersionedStore
 
     store = VersionedStore(spark, store_path)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        store.write(batch_df, mode="append")
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process_batch)
+    return _start_foreach_batch(
+        stream_df,
+        "append",
+        checkpoint_path,
+        lambda batch_df: store.write(batch_df, mode="append"),
+        trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_scd2_merge(
@@ -138,20 +148,13 @@ def streaming_scd2_merge(
 
     store = Scd2Store(spark, store_path)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def process_batch(batch_df: DataFrame) -> None:
         ctx = currents if currents is not None else create_currents()
         stamped = add_meta_columns(
             batch_df, ctx, key_columns, record_hash_exclude_columns
         )
         store.merge(stamped, currents=ctx, valid_from_mode=valid_from_mode)
 
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process_batch)
+    return _start_foreach_batch(
+        stream_df, "update", checkpoint_path, process_batch, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

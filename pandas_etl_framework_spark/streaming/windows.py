@@ -7,7 +7,10 @@ late data, and gap-based sessions via ``applyInPandasWithState``.
 
 from __future__ import annotations
 
+import shutil
+import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -15,7 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..relational import normalize_event_time
+from ..io import scratch_dir, state_store_partitions
+from ..relational import _sql_dsum, dsum, normalize_event_time
 
 SESSION_GAP_SECONDS = 1800
 
@@ -29,6 +33,8 @@ def windowed_event_counts(
 
     Works on both batch and streaming DataFrames (same plan); on a stream
     the watermark bounds state so dropped-late rows cap memory at any scale.
+    ``sum_value`` is the exact quantized sum (``relational.dsum``), so it
+    equals the batch ``events_hourly`` and does not depend on partitioning.
     """
     # watermark rejects TIMESTAMP_NTZ event time (EVENT_TIME_IS_NOT_ON_
     # TIMESTAMP_TYPE); normalize if the source schema drifted
@@ -36,7 +42,7 @@ def windowed_event_counts(
     return (
         events.withWatermark("ts", watermark_delay)
         .groupBy(F.window("ts", window_duration).alias("win"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
+        .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
@@ -249,8 +255,9 @@ def sessionize_stream(
 
 
 # --------------------------------------------------------------------------
-# Oracle-gated streaming query: the driver correctness surface
+# Oracle-gated streaming queries: the driver correctness surface
 # --------------------------------------------------------------------------
+
 
 # (schema, is_directory) per (path, mtime) of events.parquet — the probe
 # is two metadata operations (a batch footer read for the schema, one
@@ -349,152 +356,115 @@ def events_stream_source(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def q_streaming_windowed_counts(spark, sf_dir: str) -> DataFrame:
-    """Tumbling-window counts THROUGH THE REAL MICRO-BATCH ENGINE, returned
-    as a batch DataFrame so the driver can oracle-check it: file-stream
-    source over events.parquet, availableNow trigger, watermarked
-    event-time windows, memory sink in complete mode (all windows emitted;
-    the watermark still bounds per-batch state). The value sum uses the
-    repo's quantized-integer idiom so the result is order-independent —
-    a raw double sum would hash differently per partitioning. The memory
-    sink keeps only the window×type aggregate on the driver (bounded);
-    the scan/aggregation runs distributed like any stream.
+@contextmanager
+def _stream_once(spark, df: DataFrame, mode: str) -> Iterator[DataFrame]:
+    """Run the streaming ``df`` as one availableNow query and yield its
+    sink read back as a DataFrame.
 
-    Streaming is otherwise driver-unverifiable (no SQL twin can run a
-    Structured Streaming query): this entry closes that gap by making the
-    streaming engine's OUTPUT the thing the DuckDB oracle checks.
+    The sink follows the output mode. ``complete`` writes the memory
+    sink, because Spark's file sink rejects that mode; the sink is
+    driver-resident, so it serves bounded aggregates only. ``append``
+    writes a parquet sink, which holds nothing on the driver and scales
+    with the sink filesystem. Checkpoint and sink live in one
+    :func:`~pandas_etl_framework_spark.io.scratch_dir` and the run is
+    sized by :func:`~pandas_etl_framework_spark.io.state_store_partitions`.
+    The temp view and the dir are dropped on every exit, so callers
+    aggregate and ``localCheckpoint(eager=True)`` inside the ``with``.
 
-    HARNESS-ONLY BOUNDARY: a complete-mode memory sink is driver-resident
-    state and only acceptable here because the aggregate is bounded
-    (window x event_type) and the query is a one-shot availableNow run.
-    The production paths are the foreachBatch / file sinks in
-    streaming/historize.py, whose state lives in the checkpoint and sink,
-    not on the driver. The checkpoint dir and sink table are torn down
-    before returning — the result is materialized first, so repeated runs
-    leak neither disk nor catalog entries."""
-    import shutil
-    import tempfile
-    import uuid
-
-    stream = events_stream_source(spark, sf_dir)
-    stream = normalize_event_time(stream, "ts")
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n"),
-            (
-                F.sum(F.round(F.col("value") * 10000).cast("long")).cast(
-                    "double"
-                )
-                / 10000
-            ).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_ckpt_")
-    # Size the state store to the STATE, not the input: the stateful
-    # shuffle's partition count is pinned by the checkpoint at first
-    # micro-batch, and this aggregate's state cardinality is
-    # (windows x event_types) — tiny. 32 state partitions cost ~0.5s of
-    # per-batch task/state-store overhead here; 8 is right-sized and the
-    # same sizing rule (state volume, not data volume) applies on a
-    # cluster. Scoped set + restore: the checkpoint is fresh per call, so
-    # the pinning never leaks across queries.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
+    This is the harness boundary only: production streams write through
+    the foreachBatch / file sinks of streaming/historize.py, whose state
+    lives in the checkpoint and the sink."""
+    with scratch_dir("etl_stream_") as tmp, state_store_partitions(spark):
+        writer = (
+            df.writeStream.outputMode(mode)
+            .option("checkpointLocation", f"{tmp}/ckpt")
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    sink = spark.table(name)
-    rows = sink.collect()  # bounded: one row per (window, event_type)
-    out = spark.createDataFrame(rows, sink.schema)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        view = f"stream_{uuid.uuid4().hex[:8]}" if mode == "complete" else None
+        sink = f"{tmp}/sink"
+        if view:
+            writer = writer.format("memory").queryName(view)
+        else:
+            writer = writer.format("parquet").option("path", sink)
+        try:
+            writer.start().awaitTermination()
+            yield spark.table(view) if view else spark.read.parquet(sink)
+        finally:
+            if view:
+                spark.catalog.dropTempView(view)
 
 
-SQL_STREAMING_WINDOWED_COUNTS = """
+def q_streaming_windowed_counts(spark, sf_dir: str) -> DataFrame:
+    """Tumbling-window counts (:func:`windowed_event_counts`) through the
+    real micro-batch engine, returned as a batch DataFrame the DuckDB
+    oracle checks: file-stream source over events.parquet, availableNow
+    trigger, complete-mode memory sink (every window is emitted; the
+    watermark still bounds per-batch state). The sink holds one row per
+    (window, event_type)."""
+    agg = windowed_event_counts(events_stream_source(spark, sf_dir))
+    with _stream_once(spark, agg, "complete") as sink:
+        return sink.localCheckpoint(eager=True)
+
+
+SQL_STREAMING_WINDOWED_COUNTS = f"""
 SELECT date_trunc('hour', ts) AS window_start,
        date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
        event_type,
        COUNT(*) AS n,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / 10000
-           AS sum_value
+       {_sql_dsum('value', 'sum_value')}
 FROM events
 GROUP BY 1, 2, 3
 """
 
+# append mode emits a window exactly once, when the final watermark
+# (max event time - 10 min) passes its end: only the closed windows,
+# each counted once
+SQL_STREAMING_CLOSED_WINDOWS = (
+    SQL_STREAMING_WINDOWED_COUNTS
+    + """HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
+       <= (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
+"""
+)
+
+
+def q_streaming_windowed_counts_file(spark, sf_dir: str) -> DataFrame:
+    """The windowed-counts pipeline through the append-mode parquet
+    sink, the shape streaming/historize.py deploys: nothing is held on
+    the driver, so the same query scales to any corpus the sink
+    filesystem can hold. Windows land in the sink as the watermark
+    closes them (the data batch, then the availableNow finalization
+    batch that advances the watermark to max ts - delay). The last
+    windows, within the delay of max ts, stay in state exactly as on an
+    unbounded stream, so the oracle counts only the closed windows."""
+    agg = windowed_event_counts(events_stream_source(spark, sf_dir))
+    with _stream_once(spark, agg, "append") as sink:
+        return sink.localCheckpoint(eager=True)
+
 
 def q_streaming_dedup(spark, sf_dir: str) -> DataFrame:
-    """Watermarked streaming dedup THROUGH THE REAL MICRO-BATCH ENGINE,
-    oracle-checkable: file-stream the events table, run
-    ``historize.streaming_dedup`` on (user_id, event_type) with ts as
-    event time, availableNow trigger, append-mode memory sink (dedup
-    emits rows immediately — no watermark-close wait), then aggregate
-    the deduped stream per event_type so the driver compares a bounded
-    result. The dedup state is watermark-bounded: keys older than the
-    delay are dropped from the state store, which is what makes exact
-    ingest-dedup viable on an unbounded 100 TB stream.
-
-    Same HARNESS-ONLY BOUNDARY as q_streaming_windowed_counts: memory
-    sink + one-shot availableNow for verifiability; production sinks are
-    foreachBatch/file. Checkpoint dir and sink table are torn down after
-    materialization."""
-    import shutil
-    import tempfile
-    import uuid
-
+    """Watermarked streaming dedup (``historize.streaming_dedup`` on
+    (user_id, event_type) with ts as event time) through the real
+    micro-batch engine: the survivors stream into the append-mode
+    parquet sink (dedup emits rows immediately, no watermark-close
+    wait), and the per-type count is computed distributed over the
+    read-back, so the returned relation is type-sized. The dedup state
+    is watermark-bounded: keys older than the delay leave the state
+    store, which is what makes exact ingest-dedup viable on an unbounded
+    stream. Registered as ``streaming_dedup_counts`` and
+    ``streaming_dedup_counts_file``."""
     from .historize import streaming_dedup
 
-    stream = events_stream_source(spark, sf_dir)
     deduped = streaming_dedup(
-        stream, ["user_id", "event_type"], event_time_col="ts"
+        events_stream_source(spark, sf_dir),
+        ["user_id", "event_type"],
+        event_time_col="ts",
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_dedup_ckpt_")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # bounded driver result: per-type count of surviving rows
-        rows = (
-            spark.table(name)
-            .groupBy("event_type")
+    with _stream_once(spark, deduped, "append") as sink:
+        return (
+            sink.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_unique"))
-            .collect()
+            .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_unique bigint"
-    )
 
 
 # availableNow over one parquet file = a single micro-batch, so the
@@ -508,9 +478,9 @@ GROUP BY event_type
 
 
 def q_streaming_state_redelivery(spark, sf_dir: str) -> DataFrame:
-    """Failure-recovery proof for the STATE-STORE paths (VERDICT r07
-    item 5) — the twin of streaming_cdc_redelivery for a watermarked
-    windowed aggregation writing to the production FILE sink. Sequence:
+    """Failure-recovery proof for the STATE-STORE paths, the twin of
+    streaming_cdc_redelivery for :func:`windowed_event_counts` writing
+    to the append-mode parquet sink. Sequence:
 
     1. the time-earlier half of events streams in (availableNow,
        checkpoint C, append mode → parquet sink);
@@ -532,17 +502,13 @@ def q_streaming_state_redelivery(spark, sf_dir: str) -> DataFrame:
 
     The time-based split guarantees no row is ever late (batch 2's rows
     all carry event times past batch 1's maximum), so the oracle is
-    split-independent: every window whose end the final watermark
-    (global max ts - 10 min) passed, counted over the whole table."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q_stream_redeliver_")
-    src, sink = f"{tmp}/src", f"{tmp}/sink"
-    ckpt, snap = f"{tmp}/ckpt", f"{tmp}/ckpt_snapshot"
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    split-independent: the closed windows of the single-run file row."""
+    with (
+        scratch_dir("etl_stream_redeliver_") as tmp,
+        state_store_partitions(spark),
+    ):
+        src, sink = f"{tmp}/src", f"{tmp}/sink"
+        ckpt, snap = f"{tmp}/ckpt", f"{tmp}/ckpt_snapshot"
         events = normalize_event_time(
             spark.read.parquet(f"{sf_dir}/events.parquet"), "ts"
         ).select("event_id", "ts", "event_type", "value")
@@ -551,42 +517,19 @@ def q_streaming_state_redelivery(spark, sf_dir: str) -> DataFrame:
         b1 = events.filter(F.col("ts") <= F.lit(split))
         b2 = events.filter(F.col("ts") > F.lit(split))
         b1.write.parquet(src)
-        schema = b1.schema
 
         def run_once():
-            stream = spark.readStream.schema(schema).parquet(src)
-            agg = (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(
-                    F.window("ts", "1 hour").alias("win"),
-                    F.col("event_type"),
-                )
-                .agg(
-                    F.count("*").alias("n"),
-                    (
-                        F.sum(
-                            F.round(F.col("value") * 10000).cast("long")
-                        ).cast("double")
-                        / 10000
-                    ).alias("sum_value"),
-                )
-                .select(
-                    F.col("win.start").alias("window_start"),
-                    F.col("win.end").alias("window_end"),
-                    "event_type",
-                    "n",
-                    "sum_value",
-                )
-            )
-            q = (
-                agg.writeStream.outputMode("append")
+            stream = spark.readStream.schema(b1.schema).parquet(src)
+            (
+                windowed_event_counts(stream)
+                .writeStream.outputMode("append")
                 .format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
+                .awaitTermination()
             )
-            q.awaitTermination()
 
         run_once()                       # run 1: early half
         shutil.copytree(ckpt, snap)      # crash-window snapshot
@@ -595,274 +538,27 @@ def q_streaming_state_redelivery(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(ckpt)
         shutil.copytree(snap, ckpt)      # lose the offset commits
         run_once()                       # run 3: REDELIVERY
-        out = spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-# append mode emits a window exactly once, when the watermark (global max
-# event time - 10 min after the final batch) passes its end; the replay
-# must leave precisely that set, with single-counted values.
-SQL_STREAMING_STATE_REDELIVERY = """
-SELECT date_trunc('hour', ts) AS window_start,
-       date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-       event_type,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / 10000
-           AS sum_value
-FROM events
-GROUP BY 1, 2, 3
-HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
-       <= (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-"""
-
-
-def _stream_sink_tmpdir(prefix: str) -> str:
-    """Scratch root for the production-file-sink rows' sink + checkpoint
-    dirs. Default: driver-local ``tempfile.mkdtemp`` — CORRECT IN LOCAL
-    MODE ONLY (ADVICE r14): on a multi-node cluster executors do not
-    share the driver's /tmp, and both the parquet sink and the
-    checkpoint must live on storage every node reaches. Set
-    ``SPARK_GRAFT_STREAM_SINK_ROOT`` to such a shared path (NFS, HDFS
-    mount, object-store FUSE) and each call creates a unique subdir
-    under it; the caller still tears the subdir down."""
-    import os
-    import tempfile
-
-    root = os.environ.get("SPARK_GRAFT_STREAM_SINK_ROOT")
-    if root:
-        os.makedirs(root, exist_ok=True)
-        return tempfile.mkdtemp(prefix=prefix, dir=root)
-    return tempfile.mkdtemp(prefix=prefix)
-
-
-def q_streaming_windowed_counts_file(spark, sf_dir: str) -> DataFrame:
-    """The windowed-counts pipeline through the PRODUCTION FILE SINK
-    (VERDICT r13 item 2): identical source, watermark and aggregation to
-    :func:`q_streaming_windowed_counts`, but append-mode parquet instead
-    of the complete-mode memory sink — the shape streaming/historize.py
-    actually deploys. Nothing is ever held on the driver: windows land
-    in the sink as the watermark closes them (data batch, then the
-    availableNow finalization batch that advances the watermark to
-    max ts − delay and evicts every closed window — the same mechanism
-    q_streaming_sessionize's timeouts ride), and the result is the
-    read-back of the sink.
-
-    This exists because the memory-sink twin is a gate-scale instrument
-    ONLY: at sf10full its append sink holds millions of rows and
-    materializing them builds a second driver-heap copy (the r13
-    measurement-harness ceiling, SCALING.md). This row is the
-    decade-measurable form — sink size is (windows × types), driver
-    traffic is zero, so the SAME query scales to any corpus the sink
-    filesystem can hold.
-
-    Semantics difference the oracle pins: append emits a window exactly
-    once, when the final watermark passes its end — so the LAST windows
-    (within the delay of max ts) stay in state, exactly as on a real
-    unbounded stream. The oracle counts only watermark-closed windows
-    (the q_streaming_state_redelivery contract)."""
-    import shutil
-
-    tmp = _stream_sink_tmpdir("q_stream_winfile_")
-    sink, ckpt = f"{tmp}/sink", f"{tmp}/ckpt"
-    stream = normalize_event_time(events_stream_source(spark, sf_dir), "ts")
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n"),
-            (
-                F.sum(F.round(F.col("value") * 10000).cast("long")).cast(
-                    "double"
-                )
-                / 10000
-            ).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # (windows x types) rows — bounded however large the corpus
-        out = spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-# append mode through the file sink emits exactly the watermark-closed
-# windows: end <= final watermark = max ts - 10 min (the redelivery
-# row's contract, single-run form).
-SQL_STREAMING_WINDOWED_COUNTS_FILE = """
-SELECT date_trunc('hour', ts) AS window_start,
-       date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-       event_type,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / 10000
-           AS sum_value
-FROM events
-GROUP BY 1, 2, 3
-HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
-       <= (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-"""
-
-
-def q_streaming_dedup_file(spark, sf_dir: str) -> DataFrame:
-    """Watermarked streaming dedup through the PRODUCTION FILE SINK
-    (VERDICT r13 item 2): same ``streaming_dedup`` operator and source
-    as :func:`q_streaming_dedup`, but the surviving rows stream into an
-    append-mode parquet sink (dedup emits pass-through rows immediately,
-    so the sink receives every survivor in the data batch) and the
-    driver-bounded per-type count is computed DISTRIBUTED over the
-    read-back — the sink is corpus-sized, the returned relation is
-    type-sized, and no stage ever materializes the survivors on the
-    driver. This is the decade-measurable twin of the memory-sink row,
-    whose driver-resident sink OOM'd the sf10full measurement (the r13
-    harness ceiling, SCALING.md); the memory-sink row stays gate-only
-    per its declared boundary."""
-    import shutil
-
-    from .historize import streaming_dedup
-
-    tmp = _stream_sink_tmpdir("q_stream_dedupfile_")
-    sink, ckpt = f"{tmp}/sink", f"{tmp}/ckpt"
-    stream = events_stream_source(spark, sf_dir)
-    deduped = streaming_dedup(
-        stream, ["user_id", "event_type"], event_time_col="ts"
-    )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.read.parquet(sink)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_unique"))
-            .localCheckpoint(eager=True)  # type-sized after the agg
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return spark.read.parquet(sink).localCheckpoint(eager=True)
 
 
 def q_streaming_sessionize(spark, sf_dir: str) -> DataFrame:
     """The CUSTOM STATEFUL OPERATOR (``applyInPandasWithState``
-    sessionization, ``sessionize_stream``) through the real micro-batch
-    engine, oracle-checkable. availableNow over one parquet file runs the
-    data as one micro-batch (watermark still initial → every gap-closed
-    session is emitted, none dropped), then one watermark-advance batch
-    that fires the EVENT-TIME timeouts: trailing sessions whose
-    last-event + gap lies strictly before the final watermark
-    (floor-ms(max ts) − 10 min) are closed and emitted too; the rest stay
-    in state. Both emission rules are deterministic in event time and
-    SQL-expressible, which is what lets a DuckDB oracle check a stateful
-    streaming operator at all.
-
-    State is one (start, last, count) tuple per active user — bounded by
-    user cardinality, not event volume — so the same operator runs
-    unchanged on an unbounded stream at any scale. Same HARNESS-ONLY
-    BOUNDARY as the other streaming rows: memory sink + one-shot
-    availableNow for verifiability; production sinks are foreachBatch /
-    file (streaming/historize.py). Checkpoint dir and sink table are torn
-    down after materialization."""
-    import shutil
-    import tempfile
-    import uuid
-
-    stream = events_stream_source(spark, sf_dir)
-    stream = normalize_event_time(stream, "ts")
-    sessions = sessionize_stream(stream)
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_sess_ckpt_")
-    # state cardinality = active users, not events: 8 partitions (see the
-    # state-store sizing note in q_streaming_windowed_counts)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sink = spark.table(name)
-        rows = sink.collect()  # one row per closed session — bounded
-        schema = sink.schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
-
-
-def q_streaming_sessionize_file(spark, sf_dir: str) -> DataFrame:
-    """The custom stateful operator (``applyInPandasWithState``
-    sessionization) through the PRODUCTION FILE SINK (VERDICT r14
-    item 6): identical source, operator, emission rules and oracle to
-    :func:`q_streaming_sessionize`, but closed sessions stream into an
-    append-mode parquet sink instead of the collected memory sink —
-    the deployment shape of streaming/historize.py. The memory-sink
-    twin collects every closed session onto the driver, so its decade
-    measurement is bounded by session count on the driver heap (the
-    same r13 harness ceiling the windowed-counts row hit); here the
-    sink is distributed, driver traffic is zero, and the read-back is
-    executor-resident — the SAME operator scales to any corpus whose
-    sessions the sink filesystem can hold. State remains one
-    (start, last, count) tuple per active user either way."""
-    import shutil
-
-    tmp = _stream_sink_tmpdir("q_stream_sessfile_")
-    sink, ckpt = f"{tmp}/sink", f"{tmp}/ckpt"
+    sessionization, :func:`sessionize_stream`) through the real
+    micro-batch engine, closed sessions streaming into the append-mode
+    parquet sink. availableNow over one parquet file runs the data as
+    one micro-batch (watermark still initial → every gap-closed session
+    is emitted, none dropped), then one watermark-advance batch that
+    fires the EVENT-TIME timeouts: trailing sessions whose last-event +
+    gap lies strictly before the final watermark (floor-ms(max ts) −
+    10 min) are closed and emitted too; the rest stay in state. Both
+    emission rules are deterministic in event time and SQL-expressible,
+    which is what lets a DuckDB oracle check a stateful streaming
+    operator at all. State is one (start, last, count) tuple per active
+    user, bounded by user cardinality, not event volume. Registered as
+    ``streaming_sessionize`` and ``streaming_sessionize_file``."""
     stream = normalize_event_time(events_stream_source(spark, sf_dir), "ts")
-    sessions = sessionize_stream(stream)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # session-count rows, executor-resident — never on the driver
-        out = spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    with _stream_once(spark, sessionize_stream(stream), "append") as sink:
+        return sink.localCheckpoint(eager=True)
 
 
 # Batch sessionization (the events_sessionize shape, but in exact integer
@@ -910,70 +606,48 @@ WHERE s.session_seq < m.max_seq
 """
 
 
-def q_streaming_interval_join(spark, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM interval join (``interval_join_streams``) through the
-    real micro-batch engine, oracle-checkable: view→purchase attribution —
-    purchases by the same user within 30 minutes of a view. Two file-stream
-    sources over the same events table (filtered to each side's type),
-    both watermarked; the bounded time predicate is what lets the engine
-    evict join state on a real stream (state ≤ watermark_delay + max_delay
-    per key). availableNow over one parquet file = a single micro-batch
-    with the initial watermark, so no row is evicted before matching and
-    the inner-join output is exactly the batch interval join — the
-    SQL-expressible ground truth.
-
-    Same HARNESS-ONLY BOUNDARY as the other streaming rows (memory sink,
-    one-shot trigger, checkpoint + sink torn down after materialization)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    def side(event_type: str, id_alias: str, ts_alias: str, extra=None):
-        s = normalize_event_time(events_stream_source(spark, sf_dir), "ts")
-        cols = [
-            F.col("user_id"),
-            F.col("event_id").alias(id_alias),
-            F.col("ts").alias(ts_alias),
-        ]
-        if extra is not None:
-            cols.append(extra)
-        return s.filter(F.col("event_type") == event_type).select(*cols)
-
-    views = side("view", "view_id", "view_ts")
-    purchases = side(
-        "purchase", "purchase_id", "purchase_ts", F.col("value").alias("amount")
+def _event_side(spark, sf_dir: str, event_type: str, *extra) -> DataFrame:
+    """One side of the view→purchase interval joins: the events of one
+    type from a fresh events stream, as (user_id, {type}_id, {type}_ts,
+    *extra)."""
+    s = normalize_event_time(events_stream_source(spark, sf_dir), "ts")
+    return s.filter(F.col("event_type") == event_type).select(
+        "user_id",
+        F.col("event_id").alias(f"{event_type}_id"),
+        F.col("ts").alias(f"{event_type}_ts"),
+        *extra,
     )
-    joined = interval_join_streams(
-        views,
-        purchases,
+
+
+def _view_purchase_join(spark, sf_dir: str, how: str, *purchase_extra):
+    """Purchases by the same user within 30 minutes of a view, both
+    sides watermarked 10 minutes (:func:`interval_join_streams`)."""
+    return interval_join_streams(
+        _event_side(spark, sf_dir, "view"),
+        _event_side(spark, sf_dir, "purchase", *purchase_extra),
         ["user_id"],
         "view_ts",
         "purchase_ts",
         max_delay="30 minutes",
         watermark_delay="10 minutes",
+        how=how,
     )
-    name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_ij_ckpt_")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sink = spark.table(name)
-        rows = sink.collect()  # attribution pairs — bounded by match count
-        schema = sink.schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+
+
+def q_streaming_interval_join(spark, sf_dir: str) -> DataFrame:
+    """STREAM-STREAM interval join through the real micro-batch engine:
+    view→purchase attribution over two file-stream sources on the same
+    events table. The bounded time predicate is what lets the engine
+    evict join state on a real stream (state ≤ watermark_delay +
+    max_delay per key). availableNow over one parquet file = a single
+    micro-batch with the initial watermark, so no row is evicted before
+    matching and the inner-join output is exactly the batch interval
+    join — the SQL-expressible ground truth."""
+    joined = _view_purchase_join(
+        spark, sf_dir, "inner", F.col("value").alias("amount")
+    )
+    with _stream_once(spark, joined, "append") as sink:
+        return sink.localCheckpoint(eager=True)
 
 
 SQL_STREAMING_INTERVAL_JOIN = """
@@ -986,6 +660,7 @@ JOIN events r
  AND r.ts >= l.ts
  AND r.ts <= l.ts + INTERVAL 30 MINUTE
 """
+
 
 
 def q_streaming_interval_join_outer(spark, sf_dir: str) -> DataFrame:
@@ -1008,52 +683,10 @@ def q_streaming_interval_join_outer(spark, sf_dir: str) -> DataFrame:
     event time − 10 min) — Spark tracks event-time stats in
     milliseconds — and a view pads iff unmatched AND
     view_ts < watermark − 30 min (the max_delay bound), computed in
-    exact integer microseconds in both engines. Same HARNESS-ONLY
-    memory-sink boundary as the inner row."""
-    import shutil
-    import tempfile
-    import uuid
-
-    def side(event_type: str, id_alias: str, ts_alias: str):
-        s = normalize_event_time(events_stream_source(spark, sf_dir), "ts")
-        return s.filter(F.col("event_type") == event_type).select(
-            "user_id",
-            F.col("event_id").alias(id_alias),
-            F.col("ts").alias(ts_alias),
-        )
-
-    joined = interval_join_streams(
-        side("view", "view_id", "view_ts"),
-        side("purchase", "purchase_id", "purchase_ts"),
-        ["user_id"],
-        "view_ts",
-        "purchase_ts",
-        max_delay="30 minutes",
-        watermark_delay="10 minutes",
-        how="left_outer",
-    )
-    name = f"stream_loj_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_loj_ckpt_")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sink = spark.table(name)
-        rows = sink.collect()
-        schema = sink.schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    exact integer microseconds in both engines."""
+    joined = _view_purchase_join(spark, sf_dir, "left_outer")
+    with _stream_once(spark, joined, "append") as sink:
+        return sink.localCheckpoint(eager=True)
 
 
 # the final watermark in exact integer MICROseconds, mirroring Spark's
@@ -1092,6 +725,7 @@ WHERE NOT EXISTS (SELECT 1 FROM m WHERE m.view_id = v.view_id)
 """
 
 
+
 def q_streaming_enrich(spark, sf_dir: str) -> DataFrame:
     """STREAM-STATIC JOIN through the real micro-batch engine,
     oracle-checkable: the events stream is enriched per micro-batch
@@ -1100,19 +734,9 @@ def q_streaming_enrich(spark, sf_dir: str) -> DataFrame:
     joins are stateless on the stream side — each micro-batch joins
     against the (re-resolvable) static relation, which Spark plans as a
     BROADCAST join here, so an unbounded stream enriches against a
-    dimension without any join state at all. This is the standard
-    streaming-ETL enrichment shape; state exists only in the final
-    aggregate (bounded by nation cardinality).
-
-    The value sum uses the quantized-integer idiom (see
-    q_streaming_windowed_counts) so the result is partition-order
-    independent. Same HARNESS-ONLY BOUNDARY as the other streaming rows:
-    bounded complete-mode memory sink, one-shot availableNow, checkpoint
-    and sink torn down after materialization."""
-    import shutil
-    import tempfile
-    import uuid
-
+    dimension without any join state at all. State exists only in the
+    final aggregate (bounded by nation cardinality), which the
+    complete-mode memory sink holds."""
     stream = events_stream_source(spark, sf_dir)
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -1124,41 +748,16 @@ def q_streaming_enrich(spark, sf_dir: str) -> DataFrame:
         F.broadcast(nation), "c_nationkey"
     )
     agg = enriched.groupBy("n_name").agg(
-        F.count("*").alias("n_events"),
-        (
-            F.sum(F.round(F.col("value") * 10000).cast("long")).cast("double")
-            / 10000
-        ).alias("sum_value"),
+        F.count("*").alias("n_events"), dsum("value", "sum_value")
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_enrich_ckpt_")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sink = spark.table(name)
-        rows = sink.collect()  # one row per nation — bounded
-        schema = sink.schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    with _stream_once(spark, agg, "complete") as sink:
+        return sink.localCheckpoint(eager=True)
 
 
-SQL_STREAMING_ENRICH = """
+SQL_STREAMING_ENRICH = f"""
 SELECT n.n_name,
        CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(round(e.value * 10000) AS BIGINT)) AS DOUBLE) / 10000
-           AS sum_value
+       {_sql_dsum('e.value', 'sum_value')}
 FROM events e
 JOIN customer c ON e.user_id = c.c_custkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -1182,17 +781,17 @@ def register_all() -> None:
     harness.register(
         "streaming_windowed_counts_file",
         q_streaming_windowed_counts_file,
-        SQL_STREAMING_WINDOWED_COUNTS_FILE,
+        SQL_STREAMING_CLOSED_WINDOWS,
     )
     harness.register(
         "streaming_dedup_counts_file",
-        q_streaming_dedup_file,
+        q_streaming_dedup,
         SQL_STREAMING_DEDUP,
     )
     harness.register(
         "streaming_state_redelivery",
         q_streaming_state_redelivery,
-        SQL_STREAMING_STATE_REDELIVERY,
+        SQL_STREAMING_CLOSED_WINDOWS,
     )
     harness.register(
         "streaming_sessionize",
@@ -1201,7 +800,7 @@ def register_all() -> None:
     )
     harness.register(
         "streaming_sessionize_file",
-        q_streaming_sessionize_file,
+        q_streaming_sessionize,
         SQL_STREAMING_SESSIONIZE,
     )
     harness.register(

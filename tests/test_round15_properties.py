@@ -94,20 +94,6 @@ def test_stream_source_probe_invalidates_on_rewrite(spark, tmp_path):
     assert not W._STREAM_SOURCE_PROBE
 
 
-def test_stream_sink_root_env_is_honored(tmp_path, monkeypatch):
-    from pandas_etl_framework_spark.streaming.windows import _stream_sink_tmpdir
-
-    root = str(tmp_path / "shared_sink_root")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SINK_ROOT", root)
-    d = _stream_sink_tmpdir("t15_")
-    assert os.path.dirname(d) == root and os.path.isdir(d)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SINK_ROOT")
-    d2 = _stream_sink_tmpdir("t15_")
-    assert os.path.dirname(d2) != root
-    os.rmdir(d)
-    os.rmdir(d2)
-
-
 def test_gopher_top_count_fold_edge_shapes(spark):
     """Pin the r15 sort+fold rewrite of q_text_gopher_rules' top-element
     mass against the definitional counted-filter form on the shapes the
